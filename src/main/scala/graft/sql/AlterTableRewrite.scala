@@ -110,7 +110,7 @@ object AlterTableRewrite {
         TempTables.put(name, df.withColumnRenamed(real, b))
         Some(empty)
       case altTypeRe(c, tpe) if !"(?i)\\bUSING\\b".r
-          .findFirstIn(ReplaceRewrite.maskLiterals(tpe)).isDefined =>
+          .findFirstIn(SqlLexer.mask(tpe)).isDefined =>
         val real = resolve(c).getOrElse(
           fail(s"""ALTER TABLE $name: column "$c" does not exist"""))
         val dt = parseType(tpe)

@@ -45,7 +45,7 @@ object CopyToRewrite {
     // SELECT nor '(' once unwrapped.
     val (source, afterSrc) =
       if (sql.charAt(i0) == '(') {
-        val close = ReplaceRewrite.closeOf(sql, i0)
+        val close = SqlLexer.closeOf(sql, i0)
         if (close < 0) return None
         (sql.substring(i0, close).trim, close)
       } else {
@@ -90,7 +90,7 @@ object CopyToRewrite {
       val nm = """(?i)\ANULL(?:STR)?\s+'((?:[^']|'')*)'\z""".r
       // splitTop, not split(","): PARTITION_BY (a, b) carries commas
       // inside its own parens.
-      for (o <- ReplaceRewrite.splitTop(tail.substring(1, tail.length - 1))
+      for (o <- SqlLexer.splitTop(tail.substring(1, tail.length - 1))
              .map(_.trim) if o.nonEmpty) {
         o match {
           case fm(f) => format = Some(f.toLowerCase)

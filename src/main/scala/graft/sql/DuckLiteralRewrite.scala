@@ -28,8 +28,8 @@ import scala.util.control.NonFatal
   * Spark's 0-based `[]` would be a silent off-by-one on every pasted
   * script, the worst failure mode.
   *
-  * The scanner is quote/comment-aware (same contract as
-  * [[QualifyRewrite.allWords]]) and recursive: nested literals,
+  * The scanner is quote/comment-aware (it walks [[SqlLexer]]'s
+  * tokens) and recursive: nested literals,
   * comprehensions inside slices, struct values holding lists all
   * compose. Shapes it cannot place — a postfix bracket whose receiver
   * it cannot delimit (e.g. following an unbalanced construct) — decline
@@ -39,33 +39,8 @@ object DuckLiteralRewrite {
 
   /** Cheap guard: a `[` or `{` outside strings/quoted idents/comments. */
   def isShaped(sql: String): Boolean = {
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      sql.charAt(i) match {
-        case '[' | '{' => return true
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else done = true
-            } else i += 1
-          }
-          i += 1
-        case '"' => i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i += 2
-        case _ => i += 1
-      }
-    }
-    false
+    val m = SqlLexer.mask(sql)
+    m.indexOf('[') >= 0 || m.indexOf('{') >= 0
   }
 
   private case class Decline(why: String) extends RuntimeException(why)
@@ -100,42 +75,11 @@ object DuckLiteralRewrite {
     // (uppercased word, start offset IN OUT) of the last bare word emitted.
     var lastWord: (String, Int) = null
     var lastSig: Char = 0 // last significant char emitted
-    var i = 0
     val n = s.length
-    def copyString(): Unit = { // '...' with '' escapes, verbatim
-      out.append('\''); i += 1
-      var done = false
-      while (i < n && !done) {
-        if (s.charAt(i) == '\'') {
-          if (i + 1 < n && s.charAt(i + 1) == '\'') { out.append("''"); i += 2 }
-          else { out.append('\''); i += 1; done = true }
-        } else { out.append(s.charAt(i)); i += 1 }
-      }
-      lastSig = '\''
-    }
-    def copyQuoted(q: Char): Unit = {
-      out.append(q); i += 1
-      while (i < n && s.charAt(i) != q) { out.append(s.charAt(i)); i += 1 }
-      if (i < n) { out.append(q); i += 1 }
-      lastSig = q
-    }
-    while (i < n) {
-      val c = s.charAt(i)
-      c match {
-        case '\'' => copyString()
-        case '"' => copyQuoted('"')
-        case '`' => copyQuoted('`')
-        case '-' if i + 1 < n && s.charAt(i + 1) == '-' =>
-          while (i < n && s.charAt(i) != '\n') { out.append(s.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) {
-            out.append(s.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
+    SqlLexer.walk(s)({ i =>
+      s.charAt(i) match {
         case '[' =>
-          val inner = sliceGroup(s, i, '[', ']')
-          i += inner.length + 2
+          val (inner, next) = sliceGroup(s, i)
           val literalPos =
             if (lastSig == 0) true
             else if (lastSig == ')' || lastSig == ']' || lastSig == '\'' ||
@@ -157,102 +101,62 @@ object DuckLiteralRewrite {
             out.append(rewritePostfixBracket(recv, inner))
           }
           lastSig = ')'; lastWord = null
+          next
         case '{' =>
-          val inner = sliceGroup(s, i, '{', '}')
-          i += inner.length + 2
+          val (inner, next) = sliceGroup(s, i)
           val isMap = lastWord != null && lastWord._1 == "MAP" &&
             out.substring(lastWord._2).matches("(?is)MAP\\s*")
           if (isMap) out.setLength(lastWord._2)
           out.append(rewriteBrace(inner, isMap))
           lastSig = ')'; lastWord = null
+          next
         case ch if ch.isLetter || ch == '_' =>
-          val start = i
-          while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-          val w = s.substring(start, i)
+          var j = i
+          while (j < n && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) j += 1
+          val w = s.substring(i, j)
           lastWord = (w.toUpperCase, out.length)
           out.append(w)
           lastSig = w.last
+          j
         case ch =>
-          out.append(ch); i += 1
+          out.append(ch)
           if (!ch.isWhitespace) { lastSig = ch; if (!ch.isDigit) lastWord = null }
+          i + 1
       }
-    }
+    }, { (a, e) =>
+      // literals and comments verbatim; a comment is not significant
+      out.append(s.substring(a, e))
+      if (!SqlLexer.isComment(s, a))
+        lastSig = if (s.charAt(a) == '"' || s.charAt(a) == '`') s.charAt(a) else '\''
+    })
     out.toString
   }
 
-  /** Contents between the group opener at `start` and its matching
-    * closer — quote-aware, any nesting of (), [], {}.
+  /** Contents of the bracket group opening at `start`, and the index
+    * just past its closer.
     */
-  private def sliceGroup(s: String, start: Int, open: Char, close: Char): String = {
-    var i = start + 1
-    var depth = 1
-    val n = s.length
-    while (i < n && depth > 0) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case _ => i += 1
-      }
-    }
-    if (depth != 0) throw Decline(s"unbalanced $open")
-    s.substring(start + 1, i - 1)
+  private def sliceGroup(s: String, start: Int): (String, Int) = {
+    val end = SqlLexer.closeOf(s, start)
+    if (end < 0) throw Decline(s"unbalanced ${s.charAt(start)}")
+    (s.substring(start + 1, end - 1), end)
   }
 
   /** Split `s` at top-level occurrences of `sep` (quote/group-aware).
-    * With `word = true`, `sep` must be a bare word (case-insensitive);
-    * otherwise a single char. Returns the pieces (separators dropped).
+    * With `word = true`, `sep` must be a bare uppercase word; otherwise
+    * a single char. Returns the pieces (separators dropped).
     */
   private def splitTop(s: String, sep: String, word: Boolean): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    var depth = 0
-    var last = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      c match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case ch if word && depth == 0 && (ch.isLetter || ch == '_') =>
-          val start = i
-          while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-          if (s.substring(start, i).equalsIgnoreCase(sep) &&
-            (start == 0 || !s.charAt(start - 1).isLetterOrDigit)) {
-            out += s.substring(last, start); last = i
-          }
-        case ch if !word && depth == 0 && ch == sep.charAt(0) =>
-          // `::` (cast) and `:=` (named arg) are not the slice colon.
-          if (sep == ":" && ((i + 1 < n && (s.charAt(i + 1) == ':' ||
-            s.charAt(i + 1) == '=')) || (i > 0 && s.charAt(i - 1) == ':')))
-            i += 1
-          else { out += s.substring(last, i); last = i + 1; i += 1 }
-        case _ => i += 1
+    val cuts =
+      if (word) SqlLexer.topLevelWords(s).collect {
+        case (w, p) if w == sep => (p, p + w.length)
       }
-    }
-    out += s.substring(last)
-    out.result()
+      else SqlLexer.topLevel(s) { i =>
+        // `::` (cast) and `:=` (named arg) are not the slice colon.
+        s.charAt(i) == sep.charAt(0) && !(sep == ":" &&
+          (s.startsWith("::", i) || s.startsWith(":=", i) ||
+            (i > 0 && s.charAt(i - 1) == ':')))
+      }.map(i => (i, i + 1))
+    SqlLexer.cut(s, cuts)
   }
 
   /** A literal-position bracket: list literal or comprehension. */
@@ -327,54 +231,29 @@ object DuckLiteralRewrite {
     * nothing receiver-shaped precedes the bracket.
     */
   private def receiverStart(out: StringBuilder): Int = {
-    var j = out.length - 1
-    while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
+    val text = out.toString
+    def identCh(c: Char) = c.isLetterOrDigit || c == '_' || c == '$'
+    var j = text.length - 1
+    while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
     if (j < 0) throw Decline("bracket with no receiver")
-    var end = j + 1 // exclusive end of receiver (trailing ws excluded)
-    def declineIf(cond: Boolean, why: String): Unit =
-      if (cond) throw Decline(why)
+    val end = j + 1 // exclusive end of receiver (trailing ws excluded)
     var expectMore = true
     while (expectMore && j >= 0) {
-      val c = out.charAt(j)
-      if (c.isLetterOrDigit || c == '_' || c == '$') {
-        while (j >= 0 && (out.charAt(j).isLetterOrDigit ||
-          out.charAt(j) == '_' || out.charAt(j) == '$')) j -= 1
-      } else if (c == '`' || c == '"') {
-        val q = c; j -= 1
-        while (j >= 0 && out.charAt(j) != q) j -= 1
-        declineIf(j < 0, "unbalanced quoted identifier"); j -= 1
-      } else if (c == '\'') {
-        j -= 1
-        while (j >= 0 && out.charAt(j) != '\'') j -= 1
-        declineIf(j < 0, "unbalanced string")
-        // '' escapes make backward string scans ambiguous — decline.
-        declineIf(j > 0 && out.charAt(j - 1) == '\'', "escaped quote receiver")
-        j -= 1
-      } else if (c == ')') {
-        var depth = 1; j -= 1
-        while (j >= 0 && depth > 0) {
-          out.charAt(j) match {
-            case '\'' =>
-              j -= 1
-              while (j >= 0 && out.charAt(j) != '\'') j -= 1
-              declineIf(j < 0, "unbalanced string in receiver")
-            case '(' => depth -= 1
-            case ')' => depth += 1
-            case _ =>
-          }
-          j -= 1
-        }
-        declineIf(depth != 0, "unbalanced parens")
-        // A function name may precede the group; consume it if present.
-        if (j >= 0 && (out.charAt(j).isLetterOrDigit || out.charAt(j) == '_'))
-          while (j >= 0 && (out.charAt(j).isLetterOrDigit ||
-            out.charAt(j) == '_' || out.charAt(j) == '$')) j -= 1
+      val c = text.charAt(j)
+      if (identCh(c)) {
+        while (j >= 0 && identCh(text.charAt(j))) j -= 1
+      } else if (c == '`' || c == '"' || c == '\'' || c == ')') {
+        val open = SqlLexer.openOf(text, j)
+        if (open < 0) throw Decline(s"unbalanced $c in receiver")
+        j = open - 1
+        // A function name may precede a paren group; consume it if present.
+        if (c == ')') while (j >= 0 && identCh(text.charAt(j))) j -= 1
       } else throw Decline(s"receiver boundary at '$c'")
       // Chain through a dot to the next segment; otherwise stop.
-      if (j >= 0 && out.charAt(j) == '.') j -= 1 else expectMore = false
+      if (j >= 0 && text.charAt(j) == '.') j -= 1 else expectMore = false
     }
     val start = j + 1
-    declineIf(start >= end, "empty receiver")
+    if (start >= end) throw Decline("empty receiver")
     start
   }
 }

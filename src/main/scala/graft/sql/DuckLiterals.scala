@@ -34,7 +34,6 @@ package graft.sql
   */
 object DuckLiterals {
 
-  private def wordCh(c: Char): Boolean = c.isLetterOrDigit || c == '_'
   private def hexVal(c: Char): Int =
     if (c >= '0' && c <= '9') c - '0'
     else if (c >= 'a' && c <= 'f') c - 'a' + 10
@@ -45,119 +44,79 @@ object DuckLiterals {
     * DuckDB's `E'...'` ESCAPED literals (round 19: C-style \n/\t/\r/
     * \b/\f, octal \ooo, hex \xHH, unicode \uXXXX/\UXXXXXXXX, \\, \';
     * an unknown escape drops the backslash, host-probed) into plain
-    * literals carrying the UNESCAPED value. Quoted identifiers
-    * ("..."/`...`), comments, and dollar-quoted strings pass through
-    * untouched (the dollar-quote rewrite handles its own embedding).
+    * literals carrying the UNESCAPED value. Literal boundaries come from
+    * [[SqlLexer]]; quoted identifiers, comments, and dollar-quoted
+    * strings pass through untouched (the dollar-quote rewrite handles
+    * its own embedding).
     */
   def doubleBackslashes(text: String): String = {
     if (text.indexOf('\\') < 0 &&
       text.indexOf("E'") < 0 && text.indexOf("e'") < 0) return text
-    val n = text.length
-    val sb = new java.lang.StringBuilder(n + 8)
-    var i = 0
+    val sb = new java.lang.StringBuilder(text.length + 8)
     var changed = false
-    while (i < n) {
-      val c = text.charAt(i)
-      if ((c == 'E' || c == 'e') && i + 1 < n && text.charAt(i + 1) == '\'' &&
-        (i == 0 || !wordCh(text.charAt(i - 1)))) {
-        // E'...' escaped literal → unescape to the VALUE, re-emit as a
-        // plain literal under this transform's postcondition (raw
-        // backslashes doubled, quotes doubled).
-        i += 2
-        val value = new java.lang.StringBuilder
-        var done = false
-        while (i < n && !done) {
-          val d = text.charAt(i)
-          if (d == '\\' && i + 1 < n) {
-            val e2 = text.charAt(i + 1)
-            e2 match {
-              case 'n' => value.append('\n'); i += 2
-              case 't' => value.append('\t'); i += 2
-              case 'r' => value.append('\r'); i += 2
-              case 'b' => value.append('\b'); i += 2
-              case 'f' => value.append('\f'); i += 2
-              case '\\' => value.append('\\'); i += 2
-              case '\'' => value.append('\''); i += 2
-              case 'x' =>
-                var j = i + 2; var h = 0; var cnt = 0
-                while (j < n && cnt < 2 && hexVal(text.charAt(j)) >= 0) {
-                  h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
-                }
-                if (cnt == 0) { value.append('x'); i += 2 }
-                else { value.append(h.toChar); i = j }
-              case 'u' | 'U' =>
-                val want = if (e2 == 'u') 4 else 8
-                var j = i + 2; var h = 0; var cnt = 0
-                while (j < n && cnt < want && hexVal(text.charAt(j)) >= 0) {
-                  h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
-                }
-                if (cnt < want) { value.append(e2); i += 2 }
-                else { value.appendCodePoint(h); i = j }
-              case o if o >= '0' && o <= '7' =>
-                var j = i + 1; var v = 0; var cnt = 0
-                while (j < n && cnt < 3 && text.charAt(j) >= '0' &&
-                  text.charAt(j) <= '7') {
-                  v = v * 8 + (text.charAt(j) - '0'); j += 1; cnt += 1
-                }
-                value.append(v.toChar); i = j
-              case other => value.append(other); i += 2 // unknown: drop \
-            }
-          } else if (d == '\\') { value.append('\\'); i += 1 }
-          else if (d == '\'') {
-            if (i + 1 < n && text.charAt(i + 1) == '\'') {
-              value.append('\''); i += 2
-            } else { done = true; i += 1 }
-          } else { value.append(d); i += 1 }
-        }
-        sb.append('\'')
-          .append(value.toString.replace("\\", "\\\\").replace("'", "''"))
-          .append('\'')
-        changed = true
-      } else if (c == '\'') {
-        sb.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = text.charAt(i)
-          if (d == '\'') {
-            if (i + 1 < n && text.charAt(i + 1) == '\'') {
-              sb.append("''"); i += 2
-            } else { sb.append('\''); i += 1; done = true }
-          } else if (d == '\\') {
-            sb.append("\\\\"); changed = true; i += 1
-          } else { sb.append(d); i += 1 }
-        }
-      } else if (c == '"' || c == '`') {
-        sb.append(c); i += 1
-        while (i < n && text.charAt(i) != c) { sb.append(text.charAt(i)); i += 1 }
-        if (i < n) { sb.append(c); i += 1 }
-      } else if (c == '-' && i + 1 < n && text.charAt(i + 1) == '-') {
-        while (i < n && text.charAt(i) != '\n') { sb.append(text.charAt(i)); i += 1 }
-      } else if (c == '/' && i + 1 < n && text.charAt(i + 1) == '*') {
-        sb.append("/*"); i += 2
-        while (i + 1 < n &&
-          !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) {
-          sb.append(text.charAt(i)); i += 1
-        }
-        if (i + 1 < n) { sb.append("*/"); i += 2 }
-        else { while (i < n) { sb.append(text.charAt(i)); i += 1 } }
-      } else if (c == '$') {
-        // Dollar-quoted string: skip verbatim so its raw innards keep
-        // single backslashes for the dollar-quote rewrite to escape.
-        val tagM = "\\A\\$([A-Za-z_]\\w*)?\\$".r
-          .findFirstMatchIn(text.substring(i))
-        tagM match {
-          case Some(m0) =>
-            val marker = m0.matched
-            val close = text.indexOf(marker, i + marker.length)
-            if (close < 0) { sb.append(c); i += 1 }
-            else {
-              sb.append(text, i, close + marker.length)
-              i = close + marker.length
-            }
-          case None => sb.append(c); i += 1
-        }
-      } else { sb.append(c); i += 1 }
-    }
+    SqlLexer.walk(text)({ i => sb.append(text.charAt(i)); i + 1 }, { (a, e) =>
+      text.charAt(a) match {
+        case 'E' | 'e' =>
+          // E'...' escaped literal → unescape to the VALUE, re-emit as a
+          // plain literal under this transform's postcondition (raw
+          // backslashes doubled, quotes doubled).
+          sb.append('\'')
+            .append(unescape(text, a + 2, if (SqlLexer.closeOf(text, a) < 0) e else e - 1)
+              .replace("\\", "\\\\").replace("'", "''"))
+            .append('\'')
+          changed = true
+        case '\'' if { val b = text.indexOf('\\', a); b >= 0 && b < e } =>
+          sb.append(text.substring(a, e).replace("\\", "\\\\"))
+          changed = true
+        case _ => sb.append(text, a, e)
+      }
+    })
     if (changed) sb.toString else text
+  }
+
+  /** The value of the E'...' literal body [from, to). */
+  private def unescape(text: String, from: Int, to: Int): String = {
+    val value = new java.lang.StringBuilder
+    var i = from
+    while (i < to) {
+      val d = text.charAt(i)
+      if (d == '\\' && i + 1 < to) {
+        val e2 = text.charAt(i + 1)
+        e2 match {
+          case 'n' => value.append('\n'); i += 2
+          case 't' => value.append('\t'); i += 2
+          case 'r' => value.append('\r'); i += 2
+          case 'b' => value.append('\b'); i += 2
+          case 'f' => value.append('\f'); i += 2
+          case '\\' => value.append('\\'); i += 2
+          case '\'' => value.append('\''); i += 2
+          case 'x' =>
+            var j = i + 2; var h = 0; var cnt = 0
+            while (j < to && cnt < 2 && hexVal(text.charAt(j)) >= 0) {
+              h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
+            }
+            if (cnt == 0) { value.append('x'); i += 2 }
+            else { value.append(h.toChar); i = j }
+          case 'u' | 'U' =>
+            val want = if (e2 == 'u') 4 else 8
+            var j = i + 2; var h = 0; var cnt = 0
+            while (j < to && cnt < want && hexVal(text.charAt(j)) >= 0) {
+              h = h * 16 + hexVal(text.charAt(j)); j += 1; cnt += 1
+            }
+            if (cnt < want) { value.append(e2); i += 2 }
+            else { value.appendCodePoint(h); i = j }
+          case o if o >= '0' && o <= '7' =>
+            var j = i + 1; var v = 0; var cnt = 0
+            while (j < to && cnt < 3 && text.charAt(j) >= '0' &&
+              text.charAt(j) <= '7') {
+              v = v * 8 + (text.charAt(j) - '0'); j += 1; cnt += 1
+            }
+            value.append(v.toChar); i = j
+          case other => value.append(other); i += 2 // unknown: drop \
+        }
+      } else if (d == '\'') { value.append('\''); i += 2 } // a doubled quote
+      else { value.append(d); i += 1 }
+    }
+    value.toString
   }
 }

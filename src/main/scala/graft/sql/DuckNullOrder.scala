@@ -46,35 +46,10 @@ object DuckNullOrder {
     * comments are skipped without extending the key.
     */
   private def rawKeyEnd(text: String, from: Int, to: Int): Int = {
-    var i = from
-    var last = from
-    while (i < to) {
-      val c = text.charAt(i)
-      if (c == '\'') {
-        i += 1
-        var done = false
-        while (i < to && !done) {
-          if (text.charAt(i) == '\'') {
-            if (i + 1 < to && text.charAt(i + 1) == '\'') i += 2
-            else { i += 1; done = true }
-          } else i += 1
-        }
-        last = i
-      } else if (c == '"' || c == '`') {
-        i += 1
-        while (i < to && text.charAt(i) != c) i += 1
-        if (i < to) i += 1
-        last = i
-      } else if (c == '-' && i + 1 < to && text.charAt(i + 1) == '-') {
-        while (i < to && text.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < to && text.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < to &&
-          !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) i += 1
-        if (i + 1 < to) i += 2 else i = to
-      } else i += 1
-    }
-    last
+    val tail = text.substring(from, to)
+    var last = 0
+    SqlLexer.walk(tail)(_ + 1, (a, e) => if (!SqlLexer.isComment(tail, a)) last = e)
+    from + last
   }
 
   /** Raw [start, end) spans of every ORDER BY sort key in the masked
@@ -122,58 +97,24 @@ object DuckNullOrder {
     * NULLS LAST; None when the statement has nothing to change.
     */
   def rewrite(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
-    val inserts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    for (h <- orderByRe.findAllMatchIn(m)) {
-      var i = h.end
-      var depth = 0
-      var keyStart = i
-      var done = false
-      def closeKey(endExclusive: Int): Unit = {
-        // Trim to the masked text's non-space extent (comments are
-        // blanks in the mask, so an insertion never lands inside one).
-        var ks = keyStart
-        while (ks < endExclusive && m.charAt(ks).isWhitespace) ks += 1
-        var ke = endExclusive
-        while (ke > ks && m.charAt(ke - 1).isWhitespace) ke -= 1
-        if (ke > ks) {
+    val m = SqlLexer.mask(text)
+    val inserts = keySpans(m).collect {
+      case (ks, ke) if {
           val key = m.substring(ks, ke)
-          val bareAll = key.trim.equalsIgnoreCase("ALL")
-          if (!bareAll && nullsRe.findFirstIn(key).isEmpty &&
-            descRe.findFirstIn(key).isEmpty) {
-            // The masked trim lands SHORT of the raw key end when the
-            // key ends in a string literal or comment (both fully
-            // blanked in the mask) — inserting at ke would split a
-            // trailing literal, and the reparse fallback would then
-            // drop the transform for the WHOLE statement. The raw
-            // tail [ke, endExclusive) holds ONLY masked regions plus
-            // whitespace (any bare token would have survived the
-            // mask and moved ke), so walk it: the insertion point is
-            // the end of the LAST literal (comments don't extend the
-            // key; a pure-comment tail keeps ke).
-            inserts += rawKeyEnd(text, ke, endExclusive)
-          }
-        }
-      }
-      while (i < m.length && !done) {
-        val c = m.charAt(i)
-        if (c == '(') { depth += 1; i += 1 }
-        else if (c == ')') {
-          if (depth == 0) { closeKey(i); done = true }
-          else { depth -= 1; i += 1 }
-        } else if (c == ';' && depth == 0) { closeKey(i); done = true }
-        else if (c == ',' && depth == 0) {
-          closeKey(i); i += 1; keyStart = i
-        } else if (depth == 0 && c.isLetter &&
-          (i == 0 || !wordChar(m.charAt(i - 1)))) {
-          var e = i
-          while (e < m.length && wordChar(m.charAt(e))) e += 1
-          if (terminators(m.substring(i, e).toUpperCase)) {
-            closeKey(i); done = true
-          } else i = e
-        } else i += 1
-      }
-      if (!done) closeKey(m.length)
+          !key.trim.equalsIgnoreCase("ALL") &&
+            nullsRe.findFirstIn(key).isEmpty && descRe.findFirstIn(key).isEmpty
+        } =>
+        // The masked trim lands SHORT of the raw key end when the key
+        // ends in a string literal or comment (both fully blanked in
+        // the mask) — inserting at ke would split a trailing literal,
+        // and the reparse fallback would then drop the transform for
+        // the WHOLE statement. The raw tail up to the next unmasked
+        // char holds ONLY masked regions plus whitespace, so walk it:
+        // the insertion point is the end of the LAST literal (comments
+        // don't extend the key; a pure-comment tail keeps ke).
+        var end = ke
+        while (end < m.length && m.charAt(end).isWhitespace) end += 1
+        rawKeyEnd(text, ke, end)
     }
     if (inserts.isEmpty) return None
     val sb = new StringBuilder

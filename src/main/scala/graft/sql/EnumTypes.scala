@@ -59,7 +59,7 @@ object EnumTypes {
     */
   def ddlRewrite(sql: String): Option[String] = sql match {
     case createTypeRe(name, body) =>
-      val vals = ReplaceRewrite.splitTop(body).map(_.trim).map {
+      val vals = SqlLexer.splitTop(body).map(_.trim).map {
         case litRe(v) => v.replace("''", "'")
         case other => return None // non-literal member: decline
       }
@@ -93,7 +93,7 @@ object EnumTypes {
   def castRewrite(text: String): Option[String] = {
     var cur = ordRewrite(text).getOrElse(text)
     var changed = cur ne text
-    var m = ReplaceRewrite.maskLiterals(cur)
+    var m = SqlLexer.mask(cur)
 
     def arrayLit(vals: Seq[String]): String =
       "array(" + vals.map(v => s"'${v.replace("'", "''")}'").mkString(", ") + ")"
@@ -108,7 +108,7 @@ object EnumTypes {
       get(h.group(1)) match {
         case Some(vals) =>
           cur = cur.substring(0, h.start) + arrayLit(vals) + cur.substring(h.end)
-          m = ReplaceRewrite.maskLiterals(cur)
+          m = SqlLexer.mask(cur)
           changed = true
           hit = rangeRe.findFirstMatchIn(m)
         case None => hit = None
@@ -122,7 +122,7 @@ object EnumTypes {
       scan = false
       for (h <- castRe.findAllMatchIn(m) if !scan) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close > 0) {
           val inner = cur.substring(open + 1, close - 1)
           val innerM = m.substring(open + 1, close - 1)
@@ -139,7 +139,7 @@ object EnumTypes {
                 cur = cur.substring(0, h.start) +
                   s"$fn('${am.group(1).toLowerCase}', $operand)" +
                   cur.substring(close)
-                m = ReplaceRewrite.maskLiterals(cur)
+                m = SqlLexer.mask(cur)
                 changed = true
                 scan = true
               case None =>
@@ -166,7 +166,7 @@ object EnumTypes {
                   cur = cur.substring(0, ls) +
                     s"graft_enum('${h.group(1).toLowerCase}', $operand)" +
                     cur.substring(h.end)
-                  m = ReplaceRewrite.maskLiterals(cur)
+                  m = SqlLexer.mask(cur)
                   changed = true
                   again = true
                 }
@@ -197,7 +197,7 @@ object EnumTypes {
     // One wrapped cast per pass; rescan (extents shift).
     while (changed) {
       changed = false
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val spans = DuckNullOrder.keySpans(m)
       // Enum casts present in the text: (start, end, name, operand).
       val casts = scala.collection.mutable.ArrayBuffer
@@ -210,7 +210,7 @@ object EnumTypes {
         }
       for (h <- """(?i)\b(TRY_)?CAST\s*\(""".r.findAllMatchIn(m)) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close > 0) {
           val innerM = m.substring(open + 1, close - 1)
           """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r.findFirstMatchIn(innerM)

@@ -45,10 +45,10 @@ object ExcludeFrameRewrite {
 
   /** Cheap shape guard for the hint arm: an unmasked window EXCLUDE. */
   def isShaped(sql: String): Boolean = {
-    val masked = ReplaceRewrite.maskLiterals(sql)
+    val masked = SqlLexer.mask(sql)
     excludeRe.findFirstMatchIn(masked).exists { m =>
       overRe.findAllMatchIn(masked).exists { o =>
-        val close = ReplaceRewrite.closeOf(masked, masked.indexOf('(', o.start))
+        val close = SqlLexer.closeOf(masked, masked.indexOf('(', o.start))
         close > 0 && o.start < m.start && m.end <= close
       }
     }
@@ -89,12 +89,12 @@ object ExcludeFrameRewrite {
   }
 
   def rewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     if (excludeRe.findFirstMatchIn(masked).isEmpty) return None
     val repls = scala.collection.mutable.ListBuffer.empty[(Int, Int, String)]
     for (m <- overRe.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = ReplaceRewrite.closeOf(text, open) // index AFTER ')'
+      val close = SqlLexer.closeOf(text, open) // index AFTER ')'
       if (close < 0) return None
       val spec = text.substring(open + 1, close - 1)
       val specMasked = masked.substring(open + 1, close - 1)
@@ -103,13 +103,7 @@ object ExcludeFrameRewrite {
         var p = m.start - 1
         while (p >= 0 && text.charAt(p).isWhitespace) p -= 1
         if (p < 0 || text.charAt(p) != ')') return None
-        var q = p; var depth = 0; var argsOpen = -1
-        while (q >= 0 && argsOpen < 0) {
-          val c = masked.charAt(q)
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) argsOpen = q }
-          q -= 1
-        }
+        val argsOpen = SqlLexer.openOf(text, p)
         if (argsOpen < 0) return None
         var s = argsOpen - 1
         while (s >= 0 && text.charAt(s).isWhitespace) s -= 1
@@ -142,7 +136,7 @@ object ExcludeFrameRewrite {
     val prefix = spec.substring(0, fm.start).trim
     val frameText = spec.substring(fm.start).trim
     val em = excludeRe.findFirstMatchIn(
-      ReplaceRewrite.maskLiterals(frameText)).getOrElse(return None)
+      SqlLexer.mask(frameText)).getOrElse(return None)
     val mode = em.group(1).replaceAll("\\s+", " ").toUpperCase
     // EXCLUDE is the frame clause's final element; trailing text would
     // be a syntax error in DuckDB too.
@@ -168,7 +162,7 @@ object ExcludeFrameRewrite {
     val spansCurrent = lo <= 0L && 0L <= hi
     val hasOrderBy =
       "(?i)\\bORDER\\s+BY\\b".r.findFirstIn(
-        ReplaceRewrite.maskLiterals(prefix)).isDefined
+        SqlLexer.mask(prefix)).isDefined
 
     val star = arg == "*"
     val supported = Set("sum", "count", "avg", "min", "max")
@@ -243,7 +237,7 @@ object ExcludeFrameRewrite {
             // sort key — the only shape where "strictly below/above
             // the peer group" is recoverable from plain windows.
             def norm(s: String) = s.toLowerCase.replaceAll("\\s+", " ").trim
-            val pm = ReplaceRewrite.maskLiterals(prefix)
+            val pm = SqlLexer.mask(prefix)
             val ob = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(pm).toList
               .lastOption.getOrElse(return None)
             var keyText = prefix.substring(ob.end).trim

@@ -30,68 +30,27 @@ object ExcludeRewrite {
     // bareName = None and replace just the keyword; bare-name hits
     // consume through the identifier and re-emit it parenthesized.
     val spans = Vector.newBuilder[(Int, Int, Option[String])]
-    var i = 0
-    var lastSig = ' ' // last significant char seen (outside skips)
-    while (i < n) {
-      sql.charAt(i) match {
-        case '\'' =>
-          lastSig = '\''
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          lastSig = '"'; i += 1; while (i < n && sql.charAt(i) != '"') i += 1; i += 1
-        case '`' =>
-          lastSig = '`'; i += 1; while (i < n && sql.charAt(i) != '`') i += 1; i += 1
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case c if c.isLetter || c == '_' =>
-          val s = i
-          while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-          val w = sql.substring(s, i)
-          if (w.equalsIgnoreCase("EXCLUDE") && lastSig == '*') {
-            // Next significant char must open the column list.
-            var j = i
-            var next = ' '
-            var scanning = true
-            while (j < n && scanning) {
-              val cj = sql.charAt(j)
-              if (cj.isWhitespace) j += 1
-              else if (cj == '-' && j + 1 < n && sql.charAt(j + 1) == '-') {
-                while (j < n && sql.charAt(j) != '\n') j += 1
-              } else if (cj == '/' && j + 1 < n && sql.charAt(j + 1) == '*') {
-                j += 2
-                while (j + 1 < n && !(sql.charAt(j) == '*' && sql.charAt(j + 1) == '/')) j += 1
-                j = math.min(n, j + 2)
-              } else { next = cj; scanning = false }
-            }
-            if (next == '(') spans += ((s, i, None))
-            else if (next.isLetter || next == '_') {
-              var k = j
-              while (k < n && (sql.charAt(k).isLetterOrDigit ||
-                sql.charAt(k) == '_')) k += 1
-              val name = sql.substring(j, k)
-              if (!keywords.contains(name.toUpperCase)) {
-                spans += ((s, k, Some(name)))
-                i = k
-              }
-            }
-          }
-          lastSig = sql.charAt(i - 1)
-        case c =>
-          if (!c.isWhitespace) lastSig = c
-          i += 1
-      }
-    }
+    var lastSig = ' ' // last significant char seen (comments don't count)
+    var pending: (Int, Int) = null // a `*`-adjacent EXCLUDE awaiting its list
+    SqlLexer.walk(sql)({ i =>
+      val c = sql.charAt(i)
+      val p = pending
+      if (!c.isWhitespace) pending = null
+      if (c.isWhitespace) i + 1
+      else if (c == '(' && p != null) {
+        spans += ((p._1, p._2, None)); lastSig = c; i + 1
+      } else if (c.isLetter || c == '_') {
+        var j = i
+        while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
+        val w = sql.substring(i, j)
+        if (p != null && !keywords.contains(w.toUpperCase)) spans += ((p._1, j, Some(w)))
+        else if (w.equalsIgnoreCase("EXCLUDE") && lastSig == '*') pending = (i, j)
+        lastSig = w.last
+        j
+      } else { lastSig = c; i + 1 }
+    }, { (a, _) =>
+      if (!SqlLexer.isComment(sql, a)) { pending = null; lastSig = sql.charAt(a) }
+    })
     val hits = spans.result()
     if (hits.isEmpty) None
     else {

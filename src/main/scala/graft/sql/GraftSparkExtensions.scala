@@ -135,13 +135,13 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * strings/comments (any depth) — a string literal containing the
     * text must pass through untouched. */
   private def positionalShaped(sql: String): Boolean =
-    QualifyRewrite.allWords(sql).sliding(2).exists {
+    SqlLexer.allWords(sql).sliding(2).exists {
       case Vector((a, _), (b, _)) => a == "POSITIONAL" && b == "JOIN"
       case _ => false
     }
   /** Adjacent bare words ASOF [LEFT] JOIN outside strings/comments. */
   private def asofShaped(sql: String): Boolean =
-    QualifyRewrite.allWords(sql).sliding(3).exists {
+    SqlLexer.allWords(sql).sliding(3).exists {
       case Vector((a, _), (b, _), (c, _)) =>
         a == "ASOF" && (b == "JOIN" || (b == "LEFT" && c == "JOIN"))
       case _ => false
@@ -193,19 +193,19 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val mask = ReplaceRewrite.maskLiterals(cur)
+      val mask = SqlLexer.mask(cur)
       val hit = kw.findAllMatchIn(mask).flatMap { km =>
         var q = km.end
         while (q < cur.length && cur.charAt(q).isWhitespace) q += 1
         if (q >= cur.length || cur.charAt(q) != '\'') None
         else {
-          val close = cur.indexOf('\'', q + 1)
-          if (close < 0) None
+          val end = SqlLexer.closeOf(cur, q)
+          if (end < 0) None
           else {
-            val content = cur.substring(q + 1, close)
+            val content = cur.substring(q + 1, end - 1)
             val unitSeq = "(?i)\\A\\s*(?:[-+]?\\d+\\s+[a-z]+\\s*){2,}\\z".r
             if (unitSeq.findFirstIn(content).isEmpty) None
-            else Some((km.start, close + 1, content))
+            else Some((km.start, end, content))
           }
         }
       }.toSeq.headOption
@@ -270,37 +270,11 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private def intDivRewrite(text: String): Option[String] = {
     if (!text.contains("//")) return None
     val out = new StringBuilder
-    var i = 0
     var changed = false
-    val n = text.length
-    while (i < n) {
-      text.charAt(i) match {
-        case '\'' =>
-          out.append('\''); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (text.charAt(i) == '\'') {
-              if (i + 1 < n && text.charAt(i + 1) == '\'') { out.append("''"); i += 2 }
-              else { out.append('\''); i += 1; done = true }
-            } else { out.append(text.charAt(i)); i += 1 }
-          }
-        case q @ ('"' | '`') =>
-          out.append(q); i += 1
-          while (i < n && text.charAt(i) != q) { out.append(text.charAt(i)); i += 1 }
-          if (i < n) { out.append(q); i += 1 }
-        case '-' if i + 1 < n && text.charAt(i + 1) == '-' =>
-          while (i < n && text.charAt(i) != '\n') { out.append(text.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && text.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(text.charAt(i) == '*' && text.charAt(i + 1) == '/')) {
-            out.append(text.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
-        case '/' if i + 1 < n && text.charAt(i + 1) == '/' =>
-          out.append(" div "); i += 2; changed = true
-        case c => out.append(c); i += 1
-      }
-    }
+    SqlLexer.walk(text)({ i =>
+      if (text.startsWith("//", i)) { out.append(" div "); changed = true; i + 2 }
+      else { out.append(text.charAt(i)); i + 1 }
+    }, (a, e) => out.append(text.substring(a, e)))
     if (changed) Some(out.toString) else None
   }
 
@@ -332,7 +306,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val n = m.length
       val idx = m.indexOf("**")
       if (idx < 0) return if (changed) Some(cur) else None
@@ -346,7 +320,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       }
       if (r >= n) return None
       if (m.charAt(r) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, r)
+        val c = SqlLexer.closeOf(cur, r)
         if (c < 0) return None
         r = c
       } else if (wordChar(m.charAt(r))) {
@@ -354,7 +328,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         var k = r
         while (k < n && cur.charAt(k).isWhitespace) k += 1
         if (k < n && m.charAt(k) == '(') {
-          val c = ReplaceRewrite.closeOf(cur, k)
+          val c = SqlLexer.closeOf(cur, k)
           if (c < 0) return None
           r = c
         }
@@ -366,18 +340,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       if (l < 0) return None
       val le = l + 1
       if (m.charAt(l) == ')') {
-        // balanced backward scan over the mask (literal parens blanked)
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
+        val open = SqlLexer.openOf(cur, l)
+        if (open < 0) return None
+        l = open - 1
         // an optional function name directly before the open paren —
         // but never a keyword (`THEN (a) ** 2` is a plain group)
         val beforeParen = l
@@ -456,7 +421,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val n = m.length
       val ti = m.indexOf('~')
       if (ti < 0) return if (changed) Some(cur) else None
@@ -472,18 +437,8 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       while (r < n && cur.charAt(r).isWhitespace) r += 1
       if (r >= n) return None
       val rs = r
-      if (cur.charAt(r) == '\'') {
-        r += 1
-        var done = false
-        while (r < n && !done) {
-          if (cur.charAt(r) == '\'') {
-            if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-            else { r += 1; done = true }
-          } else r += 1
-        }
-        if (!done) return None
-      } else if (m.charAt(r) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, r)
+      if (cur.charAt(r) == '\'' || m.charAt(r) == '(') {
+        val c = SqlLexer.closeOf(cur, r)
         if (c < 0) return None
         r = c
       } else if (wordChar(m.charAt(r))) {
@@ -491,7 +446,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         var k = r
         while (k < n && cur.charAt(k).isWhitespace) k += 1
         if (k < n && m.charAt(k) == '(') {
-          val c = ReplaceRewrite.closeOf(cur, k)
+          val c = SqlLexer.closeOf(cur, k)
           if (c < 0) return None
           r = c
         }
@@ -503,40 +458,14 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       if (l < 0) return None
       val le = l + 1
       if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a masked string literal: forward-scan the
-        // text's literal spans (the mask can't disambiguate doubled
-        // quotes or interior spaces) to find the one ending at l
-        var i = 0
-        var start = -1
-        while (i <= l) {
-          if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-            val s = i
-            i += 1
-            var done = false
-            while (i < n && !done) {
-              if (cur.charAt(i) == '\'') {
-                if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-                else { done = true }
-              } else i += 1
-            }
-            if (i == l) start = s
-            i += 1
-          } else i += 1
-        }
+        // closing quote of a masked string literal
+        val start = SqlLexer.openOf(cur, l)
         if (start < 0) return None
         l = start - 1
       } else if (m.charAt(l) == ')') {
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
+        val open = SqlLexer.openOf(cur, l)
+        if (open < 0) return None
+        l = open - 1
         // optional function name directly before the open paren — but
         // never a clause keyword (`WHERE (a) ~ p` is a plain group)
         val beforeParen = l
@@ -616,7 +545,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var rounds = 0
     while (rounds < 16) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val n = m.length
       val mt = atRe.findFirstMatchIn(m).getOrElse(
         return if (changed) Some(cur) else None)
@@ -624,44 +553,19 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       var r = mt.end
       while (r < n && cur.charAt(r).isWhitespace) r += 1
       if (r >= n || cur.charAt(r) != '\'') return None
-      val zs = r
-      r += 1
-      var zdone = false
-      while (r < n && !zdone) {
-        if (cur.charAt(r) == '\'') {
-          if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-          else { r += 1; zdone = true }
-        } else r += 1
-      }
-      if (!zdone) return None
-      val zone = cur.substring(zs, r)
-      val re0 = r
+      val re0 = SqlLexer.closeOf(cur, r)
+      if (re0 < 0) return None
+      val zone = cur.substring(r, re0)
       // ---- left operand (ls, le] ----
       var l = mt.start - 1
       while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
       if (l < 0) return None
       val le = l + 1
       if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-        // closing quote of a masked literal: forward-scan literal spans
-        // to find the one ending here, then pull in a typed-literal
-        // keyword (TIMESTAMP '...' / DATE '...') if present.
-        var i = 0
-        var start = -1
-        while (i <= l) {
-          if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-            val s = i
-            i += 1
-            var done = false
-            while (i < n && !done) {
-              if (cur.charAt(i) == '\'') {
-                if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-                else done = true
-              } else i += 1
-            }
-            if (i == l) start = s
-            i += 1
-          } else i += 1
-        }
+        // closing quote of a masked literal: find where it opens, then
+        // pull in a typed-literal keyword (TIMESTAMP '...' / DATE '...')
+        // if present.
+        val start = SqlLexer.openOf(cur, l)
         if (start < 0) return None
         l = start - 1
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
@@ -671,17 +575,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         if (!Set("timestamp", "timestamp_ntz", "date").contains(kw))
           l = start - 1
       } else if (m.charAt(l) == ')') {
-        var depth = 1
-        l -= 1
-        while (l >= 0 && depth > 0) {
-          m.charAt(l) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1
-            case _ =>
-          }
-          l -= 1
-        }
-        if (depth != 0) return None
+        val open = SqlLexer.openOf(cur, l)
+        if (open < 0) return None
+        l = open - 1
         val beforeParen = l
         while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
         val nameEnd = l
@@ -703,7 +599,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // strip redundant outer parens to classify the operand's source
       var core = lText
       while (core.startsWith("(") && core.endsWith(")") &&
-          ReplaceRewrite.closeOf(core, 0) == core.length)
+          SqlLexer.closeOf(core, 0) == core.length)
         core = core.substring(1, core.length - 1).trim
       val fn =
         if (instantHeadRe.findFirstIn(core).isDefined) "from_utc_timestamp"
@@ -727,58 +623,22 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     */
   private def dollarQuoteRewrite(text: String): Option[String] = {
     if (!text.contains("$")) return None
-    val n = text.length
-    val tagRe = """\A\$([A-Za-z_]\w*)?\$""".r
     val sb = new StringBuilder
-    var i = 0
     var changed = false
-    def copyThrough(pred: Int => Boolean): Unit = {
-      while (i < n && !pred(i)) { sb.append(text.charAt(i)); i += 1 }
-      if (i < n) { sb.append(text.charAt(i)); i += 1 }
-    }
-    while (i < n) {
-      text.charAt(i) match {
-        case '\'' =>
-          sb.append('\''); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (text.charAt(i) == '\'') {
-              if (i + 1 < n && text.charAt(i + 1) == '\'') {
-                sb.append("''"); i += 2
-              } else { sb.append('\''); i += 1; done = true }
-            } else { sb.append(text.charAt(i)); i += 1 }
-          }
-        case q @ ('"' | '`') =>
-          sb.append(q); i += 1
-          copyThrough(j => text.charAt(j) == q)
-        case '-' if i + 1 < n && text.charAt(i + 1) == '-' =>
-          copyThrough(j => text.charAt(j) == '\n')
-        case '/' if i + 1 < n && text.charAt(i + 1) == '*' =>
-          sb.append("/*"); i += 2
-          copyThrough(j => j > 0 && text.charAt(j - 1) == '*' &&
-            text.charAt(j) == '/')
-        case '$' =>
-          tagRe.findFirstMatchIn(text.substring(i)) match {
-            case Some(m) =>
-              val marker = m.matched
-              val start = i + marker.length
-              val close = text.indexOf(marker, start)
-              if (close < 0) return None // unclosed — not the construct
-              val raw = text.substring(start, close)
-              // Dollar-quote innards are RAW (the DuckLiterals entry
-              // scan skips $...$), so this embedding doubles
-              // backslashes itself: the one unescape at re-parse
-              // restores them.
-              sb.append('\'')
-                .append(raw.replace("\\", "\\\\").replace("'", "''"))
-                .append('\'')
-              i = close + marker.length
-              changed = true
-            case None => sb.append('$'); i += 1
-          }
-        case c => sb.append(c); i += 1
-      }
-    }
+    SqlLexer.walk(text)({ i => sb.append(text.charAt(i)); i + 1 }, { (a, e) =>
+      if (text.charAt(a) == '$') {
+        val marker = text.substring(a, text.indexOf('$', a + 1) + 1)
+        val raw = text.substring(a + marker.length, e - marker.length)
+        // Dollar-quote innards are RAW (the DuckLiterals entry
+        // transform leaves $...$ alone), so this embedding doubles
+        // backslashes itself: the one unescape at re-parse restores
+        // them.
+        sb.append('\'')
+          .append(raw.replace("\\", "\\\\").replace("'", "''"))
+          .append('\'')
+        changed = true
+      } else sb.append(text.substring(a, e))
+    })
     if (changed) Some(sb.toString) else None
   }
 
@@ -799,7 +659,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         .findFirstIn(text).isDefined => return None
       case _ =>
     }
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     val kw = "(?i)\\b(FROM|JOIN)\\b".r
     val hits = kw.findAllMatchIn(masked).flatMap { m =>
       var j = m.end
@@ -811,19 +671,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val sb = new StringBuilder
     var pos = 0
     for ((kwEnd, q) <- hits) {
-      // Extract the literal (with '' doubling) from the raw text.
-      val lit = new StringBuilder
-      var k = q + 1
-      var closed = false
-      while (k < text.length && !closed) {
-        if (text.charAt(k) == '\'') {
-          if (k + 1 < text.length && text.charAt(k + 1) == '\'') {
-            lit.append('\''); k += 2
-          } else { closed = true; k += 1 }
-        } else { lit.append(text.charAt(k)); k += 1 }
-      }
-      if (!closed) return None
-      val path = lit.toString
+      val k = SqlLexer.closeOf(text, q)
+      if (k < 0) return None
+      val path = text.substring(q + 1, k - 1).replace("''", "'")
       val base = path.toLowerCase.stripSuffix(".gz").stripSuffix(".zst")
       val reader =
         if (base.endsWith(".parquet") || base.endsWith(".parq")) "read_parquet"
@@ -849,21 +699,21 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val structPackRe = "(?i)\\bstruct_pack\\s*\\(".r
   private def structPackRewrite(text: String): Option[String] = {
     if (structPackRe.findFirstIn(
-      ReplaceRewrite.maskLiterals(text)).isEmpty) return None
+      SqlLexer.mask(text)).isEmpty) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = SqlLexer.mask(cur)
       val hit = structPackRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
           if (structPackRe.findFirstIn(
-            ReplaceRewrite.maskLiterals(inner)).isDefined) None
+            SqlLexer.mask(inner)).isDefined) None
           else Some((m.start, close, inner))
         }
       }.toSeq.headOption
@@ -872,7 +722,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
           return if (changed) Some(cur) else None
         case Some((s, close, inner)) =>
           val namedRe = """(?s)\A([A-Za-z_]\w*)\s*:=\s*(.+)\z""".r
-          val body = ReplaceRewrite.splitTop(inner).map(_.trim).map { p =>
+          val body = SqlLexer.splitTop(inner).map(_.trim).map { p =>
             val m = namedRe.findFirstMatchIn(p).getOrElse(return None)
             s"'${m.group(1)}', ${m.group(2).trim}"
           }.mkString(", ")
@@ -892,21 +742,21 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val structInsertRe = "(?i)\\bstruct_insert\\s*\\(".r
   private def structInsertRewrite(text: String): Option[String] = {
     if (structInsertRe.findFirstIn(
-      ReplaceRewrite.maskLiterals(text)).isEmpty) return None
+      SqlLexer.mask(text)).isEmpty) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = SqlLexer.mask(cur)
       val hit = structInsertRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
           if (structInsertRe.findFirstIn(
-              ReplaceRewrite.maskLiterals(inner)).isDefined ||
+              SqlLexer.mask(inner)).isDefined ||
             !inner.contains(":=")) None
           else Some((m.start, close, inner))
         }
@@ -915,7 +765,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         case None =>
           return if (changed) Some(cur) else None
         case Some((s, close, inner)) =>
-          val parts = ReplaceRewrite.splitTop(inner).map(_.trim)
+          val parts = SqlLexer.splitTop(inner).map(_.trim)
           if (parts.size < 2) return None
           val namedRe = """(?s)\A([A-Za-z_]\w*)\s*:=\s*(.+)\z""".r
           val pairs = parts.tail.map { p =>
@@ -941,7 +791,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     * patterns (columns, concat) decline to the hint.
     */
   private def similarToRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     val op = "(?i)\\b(NOT\\s+)?SIMILAR\\s+TO\\b".r
     val ms = op.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
@@ -953,17 +803,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       var j = m.end
       while (j < text.length && text.charAt(j).isWhitespace) j += 1
       if (j >= text.length || text.charAt(j) != '\'') return None
-      val lit = new StringBuilder
-      var k = j + 1
-      var closed = false
-      while (k < text.length && !closed) {
-        if (text.charAt(k) == '\'') {
-          if (k + 1 < text.length && text.charAt(k + 1) == '\'') {
-            lit.append("''"); k += 2
-          } else { closed = true; k += 1 }
-        } else { lit.append(text.charAt(k)); k += 1 }
-      }
-      if (!closed) return None
+      var k = SqlLexer.closeOf(text, j)
+      if (k < 0) return None
+      val lit = new StringBuilder(text.substring(j + 1, k - 1))
       // Constant-fold a `'a' || 'b' || ...` literal concat chain into
       // the pattern (round 18 — `||` binds tighter than SIMILAR TO in
       // DuckDB, so the real pattern is the concat result). Any
@@ -976,17 +818,9 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         t += 2
         while (t < text.length && text.charAt(t).isWhitespace) t += 1
         if (t >= text.length || text.charAt(t) != '\'') return None
-        var kk = t + 1
-        var cl = false
-        while (kk < text.length && !cl) {
-          if (text.charAt(kk) == '\'') {
-            if (kk + 1 < text.length && text.charAt(kk + 1) == '\'') {
-              lit.append("''"); kk += 2
-            } else { cl = true; kk += 1 }
-          } else { lit.append(text.charAt(kk)); kk += 1 }
-        }
-        if (!cl) return None
-        k = kk
+        k = SqlLexer.closeOf(text, t)
+        if (k < 0) return None
+        lit.append(text.substring(t + 1, k - 1))
         t = k
         while (t < text.length && text.charAt(t).isWhitespace) t += 1
       }
@@ -1033,7 +867,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     */
   private val bitLiteralRe = "(?i)\\bBIT\\s+'([01]+)'".r
   private def bitLiteralRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     val ms = bitLiteralRe.findAllMatchIn(text)
       .filter(m => masked.charAt(m.start) != ' ').toList
     if (ms.isEmpty) return None
@@ -1064,7 +898,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     ("(?i)::\\s*(VARCHAR|TEXT|BPCHAR|BLOB|UTINYINT|USMALLINT|" +
       "UINTEGER|UBIGINT|UHUGEINT|HUGEINT|TIMESTAMPTZ)\\b(?!\\s*\\()").r
   private def typeSpellRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     // Unsigned widths land on the next-wider signed Spark type (the
     // value range fits; typeof() reports the signed name — documented);
     // HUGEINT on DECIMAL(38,0), the same exact-integer envelope the
@@ -1084,7 +918,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val castExtents = "(?i)\\b(?:TRY_)?CAST\\s*\\(".r
       .findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = ReplaceRewrite.closeOf(text, open)
+        val close = SqlLexer.closeOf(text, open)
         if (close < 0) None else Some((open, close))
       }.toList
     val repls = scala.collection.mutable.ListBuffer.empty[(Int, Int, String)]
@@ -1382,7 +1216,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // Spark's LTZ carry the same instant).
             () => {
               val re = "(?i)\\bTIMESTAMPTZ\\s+'([^']*)'".r
-              val masked = ReplaceRewrite.maskLiterals(text)
+              val masked = SqlLexer.mask(text)
               val ms = re.findAllMatchIn(text)
                 .filter(m2 => masked.charAt(m2.start) != ' ').toList
               if (ms.isEmpty) None
@@ -1899,7 +1733,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     "(?i)\\b(read_(?:csv(?:_auto)?|json(?:_auto)?|parquet))\\s*\\(".r
   private def namedReaderCallRewrite(text: String): Option[String] = {
     if (!text.contains("=")) return None
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     if (namedReaderNameRe.findFirstIn(masked).isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
@@ -1909,32 +1743,15 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     val namedRe = """(?s)\A([A-Za-z_]\w*)\s*=(?!=)\s*(.+)\z""".r
     for (m <- namedReaderNameRe.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = SqlLexer.closeOf(text, open)
       if (close < 0 || open < pos) ()
       else {
-        // splitTop tracks parens but not braces: re-merge fragments of
-        // a brace-struct value (columns={'a': 'T', 'b': 'U'}) that the
-        // comma split tore apart (round 18).
-        val args0 = ReplaceRewrite.splitTop(text.substring(open + 1, close - 1))
-        val args = {
-          val merged = Vector.newBuilder[String]
-          val cur = new StringBuilder
-          var bal = 0
-          for (p <- args0) {
-            if (cur.nonEmpty) cur.append(',')
-            cur.append(p)
-            bal += ReplaceRewrite.maskLiterals(p)
-              .count(_ == '{') - ReplaceRewrite.maskLiterals(p).count(_ == '}')
-            if (bal <= 0) { merged += cur.toString; cur.clear(); bal = 0 }
-          }
-          if (cur.nonEmpty) merged += cur.toString
-          merged.result()
-        }.map(_.trim)
+        val args = SqlLexer.splitTop(text.substring(open + 1, close - 1)).map(_.trim)
         val keep = Vector.newBuilder[String]
         val named = Vector.newBuilder[(String, String)]
         var ok = true
         for (a <- args if ok) {
-          val aMasked = ReplaceRewrite.maskLiterals(a)
+          val aMasked = SqlLexer.mask(a)
           namedRe.findFirstMatchIn(aMasked) match {
             case Some(nm) if !aMasked.substring(0, nm.end(1)).contains("'") =>
               val key = a.substring(nm.start(1), nm.end(1))
@@ -1950,7 +1767,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
                     v.startsWith("{") && v.endsWith("}") =>
                   val entryRe =
                     """\A'((?:[^']|'')*)'\s*:\s*'((?:[^']|'')*)'\z""".r
-                  val fields = ReplaceRewrite
+                  val fields = SqlLexer
                     .splitTop(v.substring(1, v.length - 1))
                     .map(_.trim).filter(_.nonEmpty)
                     .map {
@@ -2007,7 +1824,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     ("(?i)\\b(?:date_part|datepart)\\s*\\(\\s*'(" + duckExtractFields +
       ")'\\s*,").r
   private def extractFieldRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     // EXTRACT(field FROM e): field is a bare word, match on masked;
     // date_part('field', e): field is a literal (masked to spaces), so
     // match raw text and require the call keyword itself unmasked.
@@ -2021,7 +1838,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     var pos = 0
     for ((m, _) <- ms if m.start >= pos) {
       val open = masked.indexOf('(', m.start)
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = SqlLexer.closeOf(text, open)
       if (close < 0) return None
       val inner = text.substring(m.end, close - 1).trim
       sb.append(text.substring(pos, m.start))
@@ -2043,7 +1860,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val duckCollateRe =
     "(?i)(\\bCOLLATE\\s+)(NOCASE\\.NOACCENT|NOACCENT\\.NOCASE|NOCASE|NOACCENT)\\b".r
   private def duckCollateRewrite(text: String): Option[String] = {
-    val masked = ReplaceRewrite.maskLiterals(text)
+    val masked = SqlLexer.mask(text)
     val ms = duckCollateRe.findAllMatchIn(masked).toList
     if (ms.isEmpty) return None
     val sb = new StringBuilder
@@ -2061,16 +1878,24 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     Some(sb.toString)
   }
 
-  private def preRewrite(sqlText: String): String = sqlText match {
-    case _ if "(?i)\\bCOLLATE\\s+NO".r.findFirstIn(sqlText).isDefined &&
+  private val collateNoRe = "(?i)\\bCOLLATE\\s+NO".r
+  private val datePartCallRe = "(?i)\\b(?:date_part|datepart)\\s*\\(".r
+
+  // The arm guards look at the mask, so a trigger token inside a literal
+  // or comment never claims the statement.
+  private def preRewrite(sqlText: String): String =
+    preRewriteArms(sqlText, SqlLexer.mask(sqlText))
+
+  private def preRewriteArms(sqlText: String, masked: String): String = sqlText match {
+    case _ if collateNoRe.findFirstIn(masked).isDefined &&
         duckCollateRewrite(sqlText).isDefined =>
       preRewrite(duckCollateRewrite(sqlText).get)
-    case _ if sqlText.contains("=") &&
-        namedReaderNameRe.findFirstIn(sqlText).isDefined &&
+    case _ if masked.contains("=") &&
+        namedReaderNameRe.findFirstIn(masked).isDefined &&
         namedReaderCallRewrite(sqlText).isDefined =>
       preRewrite(namedReaderCallRewrite(sqlText).get)
-    case _ if (extractFieldRe.findFirstIn(sqlText).isDefined ||
-        datePartFieldRe.findFirstIn(sqlText).isDefined) &&
+    case _ if (extractFieldRe.findFirstIn(masked).isDefined ||
+        datePartCallRe.findFirstIn(masked).isDefined) &&
         extractFieldRewrite(sqlText).isDefined =>
       preRewrite(extractFieldRewrite(sqlText).get)
     // Window FILTER: `agg(x) FILTER (WHERE p) OVER w`. Spark PARSES the
@@ -2078,7 +1903,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // yet"), which runs before any injected resolution rule — so the
     // CASE-rewrite must claim pre-delegation too. Non-whitelisted
     // shapes pass through untouched and keep Spark's loud error.
-    case _ if { val u = sqlText.toUpperCase
+    case _ if { val u = masked.toUpperCase
         u.contains("FILTER") && u.contains("OVER") } &&
         ListOpRewrite.rewriteWindowFilter(sqlText).isDefined =>
       preRewrite(ListOpRewrite.rewriteWindowFilter(sqlText).get)
@@ -2089,8 +1914,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // `**` outside string literals is never valid Spark SQL, so no
     // native statement can be claimed; a shape the fold can't extract
     // throws the targeted hint instead of the star-usage error.
-    case _ if sqlText.contains("**") &&
-        ReplaceRewrite.maskLiterals(sqlText).contains("**") =>
+    case _ if masked.contains("**") =>
       powerOpRewrite(sqlText) match {
         case Some(r) => preRewrite(r)
         case None => throw new org.apache.spark.sql.AnalysisException(
@@ -4824,12 +4648,12 @@ object GraftSparkExtensions {
       // those columns `<value>_<alias>`, and without an alias the two
       // engines' auto-generated names cannot match.
       def splitAlias(a: String): (String, Option[String]) =
-        QualifyRewrite.topLevelWords(a).reverse.find(_._1 == "AS") match {
+        SqlLexer.topLevelWords(a).reverse.find(_._1 == "AS") match {
           case Some((_, pos)) =>
             (a.take(pos).trim, Some(a.drop(pos + 2).trim))
           case None => (a.trim, None)
         }
-      val aggParts = ReplaceRewrite.splitTop(aggSql).map(splitAlias)
+      val aggParts = SqlLexer.splitTop(aggSql).map(splitAlias)
       require(aggParts.size == 1 || aggParts.forall(_._2.isDefined),
         "pivot_auto: multiple USING aggregates each need an AS alias")
       val groups: Seq[String] =
@@ -4857,7 +4681,7 @@ object GraftSparkExtensions {
         else scala.util.Try[Any](s.toLong)
           .orElse(scala.util.Try[Any](s.toDouble)).getOrElse(s)
       }
-      val inValues = ReplaceRewrite.splitTop(valuesCsv)
+      val inValues = SqlLexer.splitTop(valuesCsv)
         .map(_.trim).filter(_.nonEmpty).map(parseVal)
       import org.apache.spark.sql.functions.{col, concat_ws, expr}
       require(onCols.length == 1 || inValues.isEmpty,
@@ -5510,7 +5334,7 @@ object GraftSparkExtensions {
       val table = asString(v(0))
       val setText = asString(v(1))
       val whereText = asString(v(2)).trim
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
+      val assignments = SqlLexer.splitTop(setText).map { a =>
         val eq = topLevelEq(a)
         require(eq > 0, s"update_table: assignment without '=': $a")
         val name = a.substring(0, eq).trim
@@ -5586,7 +5410,7 @@ object GraftSparkExtensions {
         if (whereText.isEmpty) base
         else base.filter(coalesce(expr(whereText), lit(false)))
       val returned = doomed.selectExpr(
-        ReplaceRewrite.splitTop(retText).map(_.trim): _*)
+        SqlLexer.splitTop(retText).map(_.trim): _*)
       val (cap, _) =
         graft.operators.Scratch.materialize(returned, "delete_returning")
       val keepPred =
@@ -5624,7 +5448,7 @@ object GraftSparkExtensions {
       val whereText = asString(v(2)).trim
       val retText = asString(v(3)).trim
       require(retText.nonEmpty, "update_returning: empty RETURNING list")
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
+      val assignments = SqlLexer.splitTop(setText).map { a =>
         val eq = topLevelEq(a)
         require(eq > 0, s"update_returning: assignment without '=': $a")
         (a.substring(0, eq).trim, a.substring(eq + 1).trim)
@@ -5639,7 +5463,7 @@ object GraftSparkExtensions {
           }.getOrElse(col(f))
         }: _*)
       val returned = newRows.selectExpr(
-        ReplaceRewrite.splitTop(retText).map(_.trim): _*)
+        SqlLexer.splitTop(retText).map(_.trim): _*)
       val (cap, _) =
         graft.operators.Scratch.materialize(returned, "update_returning")
       // the mutation itself: identical to update_table's projection
@@ -5744,7 +5568,7 @@ object GraftSparkExtensions {
       val setText = asString(v(1))
       val srcText = asString(v(2)).trim
       val whereText = asString(v(3)).trim
-      val assignments = ReplaceRewrite.splitTop(setText).map { a =>
+      val assignments = SqlLexer.splitTop(setText).map { a =>
         val eq = topLevelEq(a)
         require(eq > 0, s"update_from: assignment without '=': $a")
         val n = a.substring(0, eq).trim
@@ -5898,7 +5722,7 @@ object GraftSparkExtensions {
         "(?is)\\s+(NOT\\s+NULL|PRIMARY\\s+KEY|UNIQUE)\\s*\\z".r
       var pkCols = Seq.empty[String]
       var defaults = Map.empty[String, String]
-      val defs = ReplaceRewrite.splitTop(asString(v(1))).flatMap { part0 =>
+      val defs = SqlLexer.splitTop(asString(v(1))).flatMap { part0 =>
         val part = defaultRe.findFirstMatchIn(part0) match {
           case Some(dm) =>
             var ex = dm.group(1).trim
@@ -5989,20 +5813,20 @@ object GraftSparkExtensions {
     val body = body0.trim
     if (!body.regionMatches(true, 0, "VALUES", 0, 6)) return body0
     if (!"(?i)\\bDEFAULT\\b".r.findFirstIn(
-      ReplaceRewrite.maskLiterals(body)).isDefined) return body0
+      SqlLexer.mask(body)).isDefined) return body0
     val rowsText = body.substring(6)
     val fieldAt: Int => Option[org.apache.spark.sql.types.StructField] =
       i => if (cols.nonEmpty)
         cols.lift(i).flatMap(c =>
           target.fields.find(_.name.equalsIgnoreCase(c)))
       else target.fields.lift(i)
-    val rows = ReplaceRewrite.splitTop(rowsText).map(_.trim).map { row =>
+    val rows = SqlLexer.splitTop(rowsText).map(_.trim).map { row =>
       if (!row.startsWith("(")) row
       else {
-        val close = ReplaceRewrite.closeOf(row, 0)
+        val close = SqlLexer.closeOf(row, 0)
         if (close != row.length) row
         else {
-          val items = ReplaceRewrite.splitTop(row.substring(1, close - 1))
+          val items = SqlLexer.splitTop(row.substring(1, close - 1))
           val out = items.zipWithIndex.map { case (item, i) =>
             if (!item.trim.equalsIgnoreCase("DEFAULT")) item
             else fieldAt(i) match {
@@ -6114,7 +5938,7 @@ object GraftSparkExtensions {
     else
       // Project directly on the staged frame (no throwaway temp view —
       // a RETURNING-per-row ingest loop would grow the catalog forever).
-      staged.selectExpr(ReplaceRewrite.splitTop(ret).map(_.trim): _*)
+      staged.selectExpr(SqlLexer.splitTop(ret).map(_.trim): _*)
         .queryExecution.analyzed
   }
 
@@ -6275,7 +6099,7 @@ object GraftSparkExtensions {
             val refRe = ("(?i)\\b(excluded|" +
               java.util.regex.Pattern.quote(name) +
               ")\\s*\\.\\s*([A-Za-z_]\\w*)").r
-            val masked = graft.sql.ReplaceRewrite.maskLiterals(s)
+            val masked = graft.sql.SqlLexer.mask(s)
             val sb = new StringBuilder
             var pos = 0
             refRe.findAllMatchIn(masked).foreach { m =>
@@ -6289,9 +6113,9 @@ object GraftSparkExtensions {
             sb.append(s.substring(pos))
             sb.toString
           }
-          val assigns = graft.sql.ReplaceRewrite.splitTop(setText).map { a =>
+          val assigns = graft.sql.SqlLexer.splitTop(setText).map { a =>
             val eq = {
-              val masked = graft.sql.ReplaceRewrite.maskLiterals(a)
+              val masked = graft.sql.SqlLexer.mask(a)
               masked.indexOf('=')
             }
             if (eq <= 0) fail(s"DO UPDATE SET: cannot parse assignment '$a'")
@@ -6826,36 +6650,11 @@ object GraftSparkExtensions {
   /** First top-level `=` that is an assignment operator (not ==, <=,
     * >=, !=, <>), outside strings/quotes/parens; -1 when absent.
     */
-  private def topLevelEq(s: String): Int = {
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' => i += 1; while (i < n && s.charAt(i) != '"') i += 1; i += 1
-        case '`' => i += 1; while (i < n && s.charAt(i) != '`') i += 1; i += 1
-        case '(' | '[' => depth += 1; i += 1
-        case ')' | ']' => depth -= 1; i += 1
-        case '=' if depth == 0 =>
-          val prev = if (i > 0) s.charAt(i - 1) else ' '
-          val next = if (i + 1 < n) s.charAt(i + 1) else ' '
-          if (prev != '<' && prev != '>' && prev != '!' && prev != '=' &&
-            next != '=') return i
-          i += 1
-        case _ => i += 1
-      }
-    }
-    -1
-  }
+  private def topLevelEq(s: String): Int =
+    SqlLexer.topLevel(s) { i =>
+      s.charAt(i) == '=' && !(i > 0 && "<>!=".indexOf(s.charAt(i - 1)) >= 0) &&
+        !(i + 1 < s.length && s.charAt(i + 1) == '=')
+    }.headOption.getOrElse(-1)
 
   import org.apache.spark.sql.Row
 

@@ -54,38 +54,15 @@ object ListOpRewrite {
     var r = from
     while (r < n && cur.charAt(r).isWhitespace) r += 1
     if (r >= n) return None
-    if (cur.charAt(r) == '\'') {
-      r += 1
-      var done = false
-      while (r < n && !done) {
-        if (cur.charAt(r) == '\'') {
-          if (r + 1 < n && cur.charAt(r + 1) == '\'') r += 2
-          else { r += 1; done = true }
-        } else r += 1
-      }
-      if (!done) None else Some(r)
-    } else if (m.charAt(r) == '(') {
-      val c = ReplaceRewrite.closeOf(cur, r)
+    if (cur.charAt(r) == '\'' || m.charAt(r) == '(' || m.charAt(r) == '[') {
+      val c = SqlLexer.closeOf(cur, r)
       if (c < 0) None else Some(c)
-    } else if (m.charAt(r) == '[') {
-      // bracket list literal: balanced [ ] scan on the masked text
-      var depth = 0
-      var i = r
-      while (i < n) {
-        m.charAt(i) match {
-          case '[' => depth += 1
-          case ']' => depth -= 1; if (depth == 0) return Some(i + 1)
-          case _ =>
-        }
-        i += 1
-      }
-      None
     } else if (wordChar(m.charAt(r))) {
       while (r < n && wordChar(m.charAt(r))) r += 1
       var k = r
       while (k < n && cur.charAt(k).isWhitespace) k += 1
       if (k < n && m.charAt(k) == '(') {
-        val c = ReplaceRewrite.closeOf(cur, k)
+        val c = SqlLexer.closeOf(cur, k)
         if (c < 0) None else Some(c)
       } else Some(r)
     } else None
@@ -112,51 +89,13 @@ object ListOpRewrite {
     var l = at
     while (l >= 0 && cur.charAt(l).isWhitespace) l -= 1
     if (l < 0) return None
-    if (cur.charAt(l) == '\'' && m.charAt(l) == ' ') {
-      // closing quote of a masked literal: forward-scan literal spans
-      var i = 0
-      var start = -1
-      val n = m.length
-      while (i <= l) {
-        if (cur.charAt(i) == '\'' && m.charAt(i) == ' ') {
-          val s = i
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (cur.charAt(i) == '\'') {
-              if (i + 1 < n && cur.charAt(i + 1) == '\'') i += 2
-              else done = true
-            } else i += 1
-          }
-          if (i == l) start = s
-          i += 1
-        } else i += 1
-      }
-      if (start < 0) None else Some(start)
-    } else if (m.charAt(l) == ']') {
-      var depth = 0
-      var i = l
-      while (i >= 0) {
-        m.charAt(i) match {
-          case ']' => depth += 1
-          case '[' => depth -= 1; if (depth == 0) return Some(i)
-          case _ =>
-        }
-        i -= 1
-      }
-      None
+    if ((cur.charAt(l) == '\'' && m.charAt(l) == ' ') || m.charAt(l) == ']') {
+      val o = SqlLexer.openOf(cur, l)
+      if (o < 0) None else Some(o)
     } else if (m.charAt(l) == ')') {
-      var depth = 1
-      l -= 1
-      while (l >= 0 && depth > 0) {
-        m.charAt(l) match {
-          case ')' => depth += 1
-          case '(' => depth -= 1
-          case _ =>
-        }
-        l -= 1
-      }
-      if (depth != 0) return None
+      val o = SqlLexer.openOf(cur, l)
+      if (o < 0) return None
+      l = o - 1
       // optional function name directly before the open paren — but
       // never a clause keyword
       val beforeParen = l
@@ -200,7 +139,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val hits = ops.flatMap { op =>
         val i = m.indexOf(op)
         if (i >= 0) Some((i, op)) else None
@@ -276,7 +215,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 256) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       var oi = m.indexOf("->")
       var applied = false
       while (oi >= 0 && !applied) {
@@ -342,7 +281,7 @@ object ListOpRewrite {
     * fails to re-parse (dead candidate branch).
     */
   def rewriteFilterShorthand(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = SqlLexer.mask(text)
     val hits = filterShorthandRe.findAllMatchIn(m).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -383,7 +322,7 @@ object ListOpRewrite {
     while (progress && rounds < 64) {
       rounds += 1
       progress = false
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val hits = windowFilterRe.findAllMatchIn(m).toList
       var done = false
       for (h <- hits if !done) {
@@ -395,7 +334,7 @@ object ListOpRewrite {
           else {
             val aggClose = i
             val open = h.end - 1 // the FILTER clause's '('
-            val close = ReplaceRewrite.closeOf(cur, open)
+            val close = SqlLexer.closeOf(cur, open)
             if (close < 0) None
             else {
               var a = close
@@ -406,21 +345,10 @@ object ListOpRewrite {
                   m.charAt(a + 4) == '_'))
               if (!overNext) None
               else {
-                // backward balanced scan to the aggregate's '('
-                var depth = 1
-                var j = aggClose - 1
-                while (j >= 0 && depth > 0) {
-                  m.charAt(j) match {
-                    case ')' => depth += 1
-                    case '(' => depth -= 1
-                    case _ =>
-                  }
-                  j -= 1
-                }
-                if (depth != 0) None
+                val aggOpen = SqlLexer.openOf(cur, aggClose)
+                if (aggOpen < 0) None
                 else {
-                  val aggOpen = j + 1
-                  var k = j
+                  var k = aggOpen - 1
                   while (k >= 0 && cur.charAt(k).isWhitespace) k -= 1
                   val nameEnd = k
                   while (k >= 0 && (cur.charAt(k).isLetterOrDigit ||
@@ -486,13 +414,13 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val hit = quantRe.findFirstMatchIn(m) match {
         case Some(h) => h
         case None => return if (changed) Some(cur) else None
       }
       val open = m.indexOf('(', hit.end - 1)
-      val close = ReplaceRewrite.closeOf(cur, open)
+      val close = SqlLexer.closeOf(cur, open)
       if (close < 0) return None
       val inner = cur.substring(open + 1, close - 1).trim
       if (inner.toUpperCase.startsWith("SELECT") ||
@@ -519,7 +447,7 @@ object ListOpRewrite {
     * grammar position). Parse-failure only.
     */
   def rewriteIgnoreNulls(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = SqlLexer.mask(text)
     val hits = ignoreNullsInParensRe.findAllMatchIn(m).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -547,7 +475,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
@@ -585,7 +513,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       var i = 0
       var applied = false
       while (i < m.length && !applied) {
@@ -634,7 +562,7 @@ object ListOpRewrite {
   private val clockIntervalRe =
     "(?i)\\bINTERVAL\\s*('-?\\d+:\\d{1,2}:\\d{1,2}(?:\\.\\d+)?')".r
   def rewriteIntervalClock(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = SqlLexer.mask(text)
     // literals are masked, so match positions come from the raw text
     // guarded by the INTERVAL keyword being unmasked in m
     val hits = clockIntervalRe.findAllMatchIn(text).filter { h =>
@@ -657,7 +585,7 @@ object ListOpRewrite {
   }
 
   def rewriteIntervalExpr(text: String): Option[String] = {
-    val m0 = ReplaceRewrite.maskLiterals(text)
+    val m0 = SqlLexer.mask(text)
     val hits = intervalExprRe.findAllMatchIn(m0).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
@@ -665,7 +593,7 @@ object ListOpRewrite {
     var changed = false
     for (h <- hits if h.start >= pos) {
       val open = m0.indexOf('(', h.start)
-      val close = ReplaceRewrite.closeOf(text, open) // index AFTER ')'
+      val close = SqlLexer.closeOf(text, open) // index AFTER ')'
       if (close > 0) {
         var u = close
         while (u < text.length && text.charAt(u).isWhitespace) u += 1
@@ -699,14 +627,14 @@ object ListOpRewrite {
     * into explode and keeps Spark's own analysis error).
     */
   def rewriteUnnestStruct(text: String): Option[String] = {
-    val m0 = ReplaceRewrite.maskLiterals(text)
+    val m0 = SqlLexer.mask(text)
     val hits = unnestBraceRe.findAllMatchIn(m0).toList
     if (hits.isEmpty) return None
     val sb = new StringBuilder
     var pos = 0
     for (h <- hits if h.start >= pos) {
       val open = m0.indexOf('(', h.start)
-      val close = ReplaceRewrite.closeOf(text, open)
+      val close = SqlLexer.closeOf(text, open)
       if (close < 0) return None
       val inner = text.substring(open + 1, close - 1)
       sb.append(text.substring(pos, h.start))
@@ -725,7 +653,7 @@ object ListOpRewrite {
   def rewriteJsonCast(text: String): Option[String] = {
     if (!"(?i)\\bJSON\\b".r.findFirstIn(text).isDefined) return None
     var cur = text
-    var m = ReplaceRewrite.maskLiterals(cur)
+    var m = SqlLexer.mask(cur)
     var changed = false
 
     val castRe = """(?i)\b(TRY_)?CAST\s*\(""".r
@@ -734,7 +662,7 @@ object ListOpRewrite {
       scan = false
       for (h <- castRe.findAllMatchIn(m) if !scan) {
         val open = m.indexOf('(', h.start)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close > 0) {
           val inner = cur.substring(open + 1, close - 1)
           val innerM = m.substring(open + 1, close - 1)
@@ -746,7 +674,7 @@ object ListOpRewrite {
                 else "graft_json_cast"
               cur = cur.substring(0, h.start) + s"$fn($operand)" +
                 cur.substring(close)
-              m = ReplaceRewrite.maskLiterals(cur)
+              m = SqlLexer.mask(cur)
               changed = true
               scan = true
             }
@@ -766,7 +694,7 @@ object ListOpRewrite {
             if (operand.nonEmpty) {
               cur = cur.substring(0, ls) + s"graft_json_cast($operand)" +
                 cur.substring(h.end)
-              m = ReplaceRewrite.maskLiterals(cur)
+              m = SqlLexer.mask(cur)
               changed = true
               again = true
             }
@@ -798,7 +726,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 32) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val hit = globWordRe.findFirstMatchIn(m).getOrElse(
         return if (changed) Some(cur) else None)
       val re = scanRight(cur, m, hit.end).getOrElse(return None)
@@ -824,7 +752,7 @@ object ListOpRewrite {
       "FETCH\\s+(?:FIRST|NEXT)\\s+(?:(\\d+)\\s+)?ROWS?\\s+ONLY").r
   private val bareOffsetRowsRe = "(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\b".r
   def rewriteFetch(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = SqlLexer.mask(text)
     fetchRe.findFirstMatchIn(m) match {
       case Some(h) =>
         val off = Option(h.group(1)).map(k => s" OFFSET $k").getOrElse("")
@@ -856,7 +784,7 @@ object ListOpRewrite {
     var rounds = 0
     while (rounds < 64) {
       rounds += 1
-      val m = ReplaceRewrite.maskLiterals(cur)
+      val m = SqlLexer.mask(cur)
       val hitOpt = dotCallRe.findAllMatchIn(m).find { h =>
         var p = h.start - 1
         while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
@@ -870,7 +798,7 @@ object ListOpRewrite {
       val receiver = cur.substring(ls, p + 1)
       val fn = hit.group(1)
       val open = hit.end - 1
-      val close = ReplaceRewrite.closeOf(cur, open)
+      val close = SqlLexer.closeOf(cur, open)
       if (close < 0) return None
       val args = cur.substring(open + 1, close - 1).trim
       val call =
@@ -882,10 +810,10 @@ object ListOpRewrite {
   }
 
   def rewriteLimitPercent(text: String): Option[String] = {
-    val m = ReplaceRewrite.maskLiterals(text)
+    val m = SqlLexer.mask(text)
     val hit = limitPctRe.findFirstMatchIn(m).getOrElse(return None)
     val pct = hit.group(1)
-    val words = QualifyRewrite.topLevelWords(text)
+    val words = SqlLexer.topLevelWords(text)
     // the LIMIT must be top-level (not inside a subquery)
     val limW = words.reverse.find(w => w._1 == "LIMIT").getOrElse(return None)
     if (limW._2 != hit.start) return None
@@ -896,7 +824,7 @@ object ListOpRewrite {
         val keys = text.substring(ow._2, hit.start).trim
           .replaceFirst("(?i)\\Aorder\\s+by\\b", "").trim
         if (keys.isEmpty) return None
-        if (ReplaceRewrite.splitTop(keys).map(_.trim)
+        if (SqlLexer.splitTop(keys).map(_.trim)
           .exists(k => k.split("\\s+").headOption.exists(_.matches("\\d+"))))
           return None // ordinal keys: constants inside OVER
         val body = text.substring(0, ow._2).trim

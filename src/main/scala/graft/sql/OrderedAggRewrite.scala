@@ -49,39 +49,23 @@ object OrderedAggRewrite {
   private val orderInsensitive = Set("count", "sum", "avg", "min", "max",
     "bool_and", "bool_or")
 
-  /** Index of the first depth-0 `ORDER BY` inside an (already
-    * literal-masked) argument text, or -1.
+  /** Index of the first depth-0 `ORDER BY` inside an argument text,
+    * or -1.
     */
-  private def topOrderBy(masked: String): Int = {
-    var i = 0
-    var depth = 0
-    val n = masked.length
-    while (i < n) {
-      masked.charAt(i) match {
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case c if depth == 0 && (c == 'o' || c == 'O') &&
-            masked.regionMatches(true, i, "ORDER", 0, 5) &&
-            (i == 0 || !isWordChar(masked.charAt(i - 1))) =>
-          var j = i + 5
-          var sawWs = false
-          while (j < n && masked.charAt(j).isWhitespace) { j += 1; sawWs = true }
-          if (sawWs && masked.regionMatches(true, j, "BY", 0, 2) &&
-            (j + 2 >= n || !isWordChar(masked.charAt(j + 2)))) return i
-          i += 5
-        case _ => i += 1
-      }
-    }
-    -1
+  private def topOrderBy(text: String): Int = {
+    val words = SqlLexer.topLevelWords(text)
+    words.zip(words.drop(1)).collectFirst {
+      case ((o, p), (b, q)) if o == "ORDER" && b == "BY" &&
+        text.substring(p + 5, q).forall(_.isWhitespace) => p
+    }.getOrElse(-1)
   }
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
 
   private case class Key(expr: String, desc: Boolean, nullsFirst: Boolean)
   private val keyRe =
     "(?is)\\A(.+?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*\\z".r
 
   private def parseKeys(keysText: String): Option[Vector[Key]] = {
-    val parts = ReplaceRewrite.splitTop(keysText).map(_.trim).filter(_.nonEmpty)
+    val parts = SqlLexer.splitTop(keysText).map(_.trim).filter(_.nonEmpty)
     if (parts.isEmpty) return None
     val ks = parts.map { p =>
       keyRe.findFirstMatchIn(p) match {
@@ -149,23 +133,23 @@ object OrderedAggRewrite {
 
   def rewrite(text: String): Option[String] = {
     if (!shapedRe.pattern.matcher(
-      ReplaceRewrite.maskLiterals(text)).matches) return None
+      SqlLexer.mask(text)).matches) return None
     var cur = text
     var changed = false
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val masked = ReplaceRewrite.maskLiterals(cur)
+      val masked = SqlLexer.mask(cur)
       // Innermost-first (the structPack convention): skip a call whose
       // own args still contain another qualifying call, so nested
       // occurrences resolve inside-out.
       val hit = callRe.findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.end - 1)
-        val close = ReplaceRewrite.closeOf(cur, open)
+        val close = SqlLexer.closeOf(cur, open)
         if (close < 0) None
         else {
           val inner = cur.substring(open + 1, close - 1)
-          val innerMasked = ReplaceRewrite.maskLiterals(inner)
+          val innerMasked = SqlLexer.mask(inner)
           val ob = topOrderBy(innerMasked)
           if (ob < 0) None
           else if (shapedRe.pattern.matcher(innerMasked).matches) None
@@ -188,7 +172,7 @@ object OrderedAggRewrite {
           val (filterSuffix, afterCall) =
             filterRe.findFirstMatchIn(tail) match {
               case Some(fm) =>
-                val fc = ReplaceRewrite.closeOf(tail, fm.end - 1)
+                val fc = SqlLexer.closeOf(tail, fm.end - 1)
                 if (fc < 0) ("", close)
                 else (" " + tail.substring(0, fc).trim, close + fc)
               case None => ("", close)

@@ -59,7 +59,7 @@ object PrepareRewrite {
         fail(s"""Prepared statement "${name.toLowerCase}" does not exist""")
       val args =
         if (argText == null || argText.trim.isEmpty) Vector.empty[String]
-        else ReplaceRewrite.splitTop(argText).map(_.trim)
+        else SqlLexer.splitTop(argText).map(_.trim)
       if (args.exists(_.isEmpty)) fail(s"EXECUTE $name: empty argument")
       Some(substitute(name.toLowerCase, template, args))
     case _ => None
@@ -70,35 +70,11 @@ object PrepareRewrite {
     */
   private def substitute(name: String, template: String, args: Vector[String]): String = {
     val out = new StringBuilder
-    var i = 0
     var positional = 0
     var used = Set.empty[Int]
     val n = template.length
-    while (i < n) {
-      val c = template.charAt(i)
-      c match {
-        case '\'' =>
-          out.append(c); i += 1
-          var done = false
-          while (i < n && !done) {
-            if (template.charAt(i) == '\'') {
-              if (i + 1 < n && template.charAt(i + 1) == '\'') {
-                out.append("''"); i += 2
-              } else { out.append('\''); i += 1; done = true }
-            } else { out.append(template.charAt(i)); i += 1 }
-          }
-        case '"' | '`' =>
-          out.append(c); i += 1
-          while (i < n && template.charAt(i) != c) { out.append(template.charAt(i)); i += 1 }
-          if (i < n) { out.append(c); i += 1 }
-        case '-' if i + 1 < n && template.charAt(i + 1) == '-' =>
-          while (i < n && template.charAt(i) != '\n') { out.append(template.charAt(i)); i += 1 }
-        case '/' if i + 1 < n && template.charAt(i + 1) == '*' =>
-          out.append("/*"); i += 2
-          while (i + 1 < n && !(template.charAt(i) == '*' && template.charAt(i + 1) == '/')) {
-            out.append(template.charAt(i)); i += 1
-          }
-          if (i + 1 < n) { out.append("*/"); i += 2 }
+    SqlLexer.walk(template)({ i =>
+      template.charAt(i) match {
         case '$' if i + 1 < n && template.charAt(i + 1).isDigit =>
           var j = i + 1
           while (j < n && template.charAt(j).isDigit) j += 1
@@ -108,7 +84,7 @@ object PrepareRewrite {
               s"${args.length} argument(s) were supplied")
           used += idx
           out.append('(').append(args(idx - 1)).append(')')
-          i = j
+          j
         case '?' =>
           positional += 1
           if (positional > args.length)
@@ -116,10 +92,10 @@ object PrepareRewrite {
               s"positional markers but ${args.length} argument(s) were supplied")
           used += positional
           out.append('(').append(args(positional - 1)).append(')')
-          i += 1
-        case ch => out.append(ch); i += 1
+          i + 1
+        case ch => out.append(ch); i + 1
       }
-    }
+    }, (a, e) => out.append(template.substring(a, e)))
     if (used.size < args.length)
       fail(s"EXECUTE $name: ${args.length} argument(s) supplied but the " +
         s"statement uses ${used.size}")

@@ -77,7 +77,7 @@ object UpdateDeleteRewrite {
   /** The TVF call text, or None → delegate to Spark's native path. */
   def rewrite(sql: String): Option[String] =
     try {
-      val words = QualifyRewrite.topLevelWords(sql)
+      val words = SqlLexer.topLevelWords(sql)
       if (words.isEmpty) return None
       if (words.exists(_._1 == "?")) return None // positional params move
       words.head._1 match {

@@ -9,17 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QualifyRewriteSpec extends AnyFunSuite {
 
-  test("topLevelWords skips strings, quoted identifiers, comments, and parens") {
-    val sql =
-      """SELECT 'QUALIFY (not) -- here', "QUALIFY", `QUALIFY x`,
-         (SELECT max(v) FROM t2 /* QUALIFY */) AS m -- QUALIFY
-         FROM t"""
-    val words = QualifyRewrite.topLevelWords(sql).map(_._1)
-    assert(!words.contains("QUALIFY"))
-    assert(words.count(_ == "SELECT") == 1) // the subquery's SELECT is depth-1
-    assert(words.containsSlice(Seq("AS", "M", "FROM", "T")))
-  }
-
   test("simple rewrite wraps, filters, and preserves trailing ORDER BY") {
     val out = QualifyRewrite.rewrite(
       "SELECT a, b FROM t QUALIFY row_number() OVER (ORDER BY b) <= 2 ORDER BY a").get

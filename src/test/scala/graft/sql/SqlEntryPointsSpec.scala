@@ -434,6 +434,15 @@ class SqlEntryPointsSpec extends AnyFunSuite {
       .toSeq == Seq("a", "b"))
     // `$$` inside an ordinary string literal is data, not a marker.
     assert(one("SELECT '$$not a quote$$' AS s") == "$$not a quote$$")
+    // A tagged quote holds `$$` as data.
+    assert(one("SELECT $a$x$$y$a$") == "x$$y")
+    // Trigger tokens of the pre-parse rewrites stay data inside a
+    // dollar quote (DuckDB 1.0 values).
+    assert(one("SELECT $$x COLLATE NOCASE$$") == "x COLLATE NOCASE")
+    assert(one("SELECT $$count(*) FILTER (WHERE p) OVER w$$") ==
+      "count(*) FILTER (WHERE p) OVER w")
+    assert(one("SELECT $$read_csv(x, header=true)$$") == "read_csv(x, header=true)")
+    assert(one("SELECT $$2 ** 3$$") == "2 ** 3")
     // Composes with other chain rewrites (QUALIFY + dollar literal).
     val q = spark.sql(
       """SELECT sym, tag || $$!$$ AS t2,
