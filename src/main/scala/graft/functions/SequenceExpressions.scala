@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * nextval('s') AS b` into one advance (DuckDB yields 1, 2) and constant
   * folding would advance it at plan time. CodegenFallback keeps the
   * stateful call out of generated code; the surrounding operators still
-  * codegen.
+  * codegen. `stateId` is the analyzing session's
+  * [[graft.sql.GraftSessionState]] id: the task resolves the sequence
+  * there, not in whichever session is active on its thread.
   */
-case class NextVal(child: Expression)
+case class NextVal(child: Expression, stateId: Long)
     extends UnaryExpression with Nondeterministic with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -22,19 +24,21 @@ case class NextVal(child: Expression)
   override protected def evalInternal(input: InternalRow): Any = {
     val name = child.eval(input)
     require(name != null, "nextval: sequence name must not be NULL")
-    graft.sql.Sequences.nextval(name.toString)
+    graft.sql.Sequences.nextval(
+      graft.sql.GraftSessionState.byId(stateId), name.toString)
   }
   override protected def withNewChildInternal(newChild: Expression): NextVal =
     copy(child = newChild)
   override def prettyName: String = "nextval"
 }
 
-/** `currval('seq')` — the last value this session's `nextval` returned.
+/** `currval('seq')` — the last value the analyzing session's `nextval`
+  * returned.
   * Nondeterministic for the same optimizer-fencing reason: it reads
   * mutable session state and must re-evaluate at execution time, after
   * any `nextval` earlier in the same select list.
   */
-case class CurrVal(child: Expression)
+case class CurrVal(child: Expression, stateId: Long)
     extends UnaryExpression with Nondeterministic with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -42,7 +46,8 @@ case class CurrVal(child: Expression)
   override protected def evalInternal(input: InternalRow): Any = {
     val name = child.eval(input)
     require(name != null, "currval: sequence name must not be NULL")
-    graft.sql.Sequences.currval(name.toString)
+    graft.sql.Sequences.currval(
+      graft.sql.GraftSessionState.byId(stateId), name.toString)
   }
   override protected def withNewChildInternal(newChild: Expression): CurrVal =
     copy(child = newChild)

@@ -103,6 +103,13 @@ final class ModelInfo(val name: String) {
   * (highs_extension.cpp:46-76). Unlike the reference (whose RemoveModel is
   * unreachable from SQL), `remove`/`clear` are part of the public API so
   * models can be rebuilt in long-lived sessions.
+  *
+  * Process-global on purpose: the reference's registry is one singleton
+  * shared by every DuckDB connection, so a model built in one Spark
+  * session is visible to (and solvable from) every other. The dialect
+  * state DuckDB scopes to a connection — temp tables, sequences,
+  * prepared statements — lives per session in
+  * [[graft.sql.GraftSessionState]] instead.
   */
 object ModelRegistry {
   private val models = new ConcurrentHashMap[String, ModelInfo]()

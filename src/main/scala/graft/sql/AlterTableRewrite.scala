@@ -43,11 +43,6 @@ object AlterTableRewrite {
   private val altTypeRe =
     """(?is)\AALTER\s+(?:COLUMN\s+)?([A-Za-z_]\w*)\s+(?:SET\s+DATA\s+)?TYPE\s+(.+?)\z""".r
 
-  /** Evaluated-once extractor (the rewrite performs the mutation). */
-  object Rewritten {
-    def unapply(sql: String): Option[String] = rewrite(sql)
-  }
-
   /** DuckDB's length-less string spellings → Spark's STRING (same
     * normalization as CREATE TEMP TABLE's column defs).
     */
@@ -60,14 +55,13 @@ object AlterTableRewrite {
 
   private val empty = "SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0"
 
-  def rewrite(sql: String): Option[String] = {
+  /** Evaluated once per statement: the rewrite performs the mutation. */
+  def rewrite(st: GraftSessionState, sql: String): Option[String] = {
     val m = headRe.findFirstMatchIn(sql).getOrElse(return None)
     val name = m.group(1)
     val rest = m.group(2).trim
-    if (!TempTables.exists(name)) return None
-    val spark =
-      try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
+    if (!TempTables.exists(st, name)) return None
+    val spark = st.session
     import org.apache.spark.sql.functions.{col, expr, lit}
     val df = spark.table(name)
     def resolve(c: String): Option[String] =
@@ -84,37 +78,37 @@ object AlterTableRewrite {
         } else {
           val dt = parseType(tpe)
           val e = Option(dflt).map(d => expr(d.trim)).getOrElse(lit(null))
-          TempTables.put(name, df.withColumn(c, e.cast(dt)))
+          TempTables.put(st, name, df.withColumn(c, e.cast(dt)))
         }
         Some(empty)
       case dropRe(ifex, c) =>
         resolve(c) match {
-          case Some(real) => TempTables.put(name, df.drop(real))
+          case Some(real) => TempTables.put(st, name, df.drop(real))
           case None if ifex != null => ()
           case None =>
             fail(s"""ALTER TABLE $name: column "$c" does not exist""")
         }
         Some(empty)
       case renToRe(newName) =>
-        if (TempTables.exists(newName) || spark.catalog.tableExists(newName))
+        if (TempTables.exists(st, newName) || spark.catalog.tableExists(newName))
           fail(s"""ALTER TABLE: table with name "$newName" already exists""")
-        TempTables.put(newName, df)
-        TempTables.keysOf(name).foreach(TempTables.setKeys(newName, _))
-        TempTables.drop(name)
+        TempTables.put(st, newName, df)
+        TempTables.keysOf(st, name).foreach(TempTables.setKeys(st, newName, _))
+        TempTables.drop(st, name)
         Some(empty)
       case renColRe(a, b) =>
         val real = resolve(a).getOrElse(
           fail(s"""ALTER TABLE $name: column "$a" does not exist"""))
         if (resolve(b).isDefined)
           fail(s"""ALTER TABLE $name: column "$b" already exists""")
-        TempTables.put(name, df.withColumnRenamed(real, b))
+        TempTables.put(st, name, df.withColumnRenamed(real, b))
         Some(empty)
       case altTypeRe(c, tpe) if !"(?i)\\bUSING\\b".r
           .findFirstIn(SqlLexer.mask(tpe)).isDefined =>
         val real = resolve(c).getOrElse(
           fail(s"""ALTER TABLE $name: column "$c" does not exist"""))
         val dt = parseType(tpe)
-        TempTables.put(name, df.withColumn(real, col(real).cast(dt)))
+        TempTables.put(st, name, df.withColumn(real, col(real).cast(dt)))
         Some(empty)
       case _ =>
         fail(s"ALTER TABLE on temp table '$name': supported forms are " +

@@ -1,7 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
-
 /** Session-scoped ENUM type registry (round 18) — DuckDB's
   * `CREATE TYPE name AS ENUM ('a', 'b', ...)`.
   *
@@ -16,35 +14,10 @@ import org.apache.spark.sql.SparkSession
   * Ordering divergence (documented): DuckDB compares enums by member
   * INDEX; the VARCHAR model compares lexicographically.
   */
-/** Single-evaluation extractor: DROP TYPE's registry removal is a side
-  * effect — the rewrite must run exactly once per statement (the
-  * TempTableRewritten pattern).
-  */
-object EnumDdlRewritten {
-  def unapply(sql: String): Option[String] =
-    if ("(?is)\\A\\s*(CREATE|DROP)\\s+TYPE\\b".r.findFirstIn(sql).isDefined)
-      EnumTypes.ddlRewrite(sql)
-    else None
-}
-
 object EnumTypes {
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[String]]()
-
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
-
-  def define(name: String, values: Seq[String]): Unit = {
-    registry.put(key(name), values)
-    ()
-  }
-
-  def get(name: String): Option[Seq[String]] =
-    try Option(registry.get(key(name)))
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  def drop(name: String): Boolean = registry.remove(key(name)) != null
+  def get(st: GraftSessionState, name: String): Option[Seq[String]] =
+    Option(st.enums.get(name.toLowerCase))
 
   private val createTypeRe =
     ("""(?is)\A\s*CREATE\s+TYPE\s+([A-Za-z_]\w*)\s+AS\s+ENUM\s*""" +
@@ -57,17 +30,17 @@ object EnumTypes {
     * (Spark rejects both at parse, so no native statement is claimed);
     * the marker select returns DuckDB's empty result.
     */
-  def ddlRewrite(sql: String): Option[String] = sql match {
+  def ddlRewrite(st: GraftSessionState, sql: String): Option[String] = sql match {
     case createTypeRe(name, body) =>
       val vals = SqlLexer.splitTop(body).map(_.trim).map {
         case litRe(v) => v.replace("''", "'")
         case other => return None // non-literal member: decline
       }
       if (vals.isEmpty) return None
-      define(name, vals.toSeq)
+      st.enums.put(name.toLowerCase, vals.toSeq)
       Some("SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0")
     case dropTypeRe(ifExists, name) =>
-      if (!drop(name) && ifExists == null)
+      if (st.enums.remove(name.toLowerCase) == null && ifExists == null)
         throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION", Map("errorMessage" ->
             s"Type with name $name does not exist!"))
@@ -90,8 +63,8 @@ object EnumTypes {
     * the statement) keep the documented lexicographic divergence: the
     * registry has no column-type tracking to know better.
     */
-  def castRewrite(text: String): Option[String] = {
-    var cur = ordRewrite(text).getOrElse(text)
+  def castRewrite(st: GraftSessionState, text: String): Option[String] = {
+    var cur = ordRewrite(st, text).getOrElse(text)
     var changed = cur ne text
     var m = SqlLexer.mask(cur)
 
@@ -105,7 +78,7 @@ object EnumTypes {
     var hit = rangeRe.findFirstMatchIn(m)
     while (hit.isDefined) {
       val h = hit.get
-      get(h.group(1)) match {
+      get(st, h.group(1)) match {
         case Some(vals) =>
           cur = cur.substring(0, h.start) + arrayLit(vals) + cur.substring(h.end)
           m = SqlLexer.mask(cur)
@@ -131,7 +104,7 @@ object EnumTypes {
           // yielding an empty operand).
           val asRe = """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r
           asRe.findFirstMatchIn(innerM).foreach { am =>
-            get(am.group(1)) match {
+            get(st, am.group(1)) match {
               case Some(_) =>
                 val operand = inner.substring(0, am.start).trim
                 val tryPrefix = h.group(1) != null
@@ -157,7 +130,7 @@ object EnumTypes {
       again = false
       for (h <- colonRe.findAllMatchIn(m) if !again
            if m.charAt(h.start) == ':') {
-        get(h.group(1)) match {
+        get(st, h.group(1)) match {
           case Some(_) =>
             ListOpRewrite.scanLeftPub(cur, m, h.start - 1) match {
               case Some(ls) =>
@@ -188,8 +161,8 @@ object EnumTypes {
     * untouched; BETWEEN and untyped VARCHAR columns remain the
     * documented divergence.
     */
-  private[sql] def ordRewrite(text: String): Option[String] = {
-    if (registry.isEmpty) return None
+  private[sql] def ordRewrite(st: GraftSessionState, text: String): Option[String] = {
+    if (st.enums.isEmpty) return None
     var cur = text
     var changed = true
     var any = false
@@ -203,7 +176,7 @@ object EnumTypes {
       val casts = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Int, String, String)]
       for (h <- """::\s*([A-Za-z_]\w*)""".r.findAllMatchIn(m)
-           if get(h.group(1)).isDefined)
+           if get(st, h.group(1)).isDefined)
         ListOpRewrite.scanLeftPub(cur, m, h.start - 1).foreach { ls =>
           val op = cur.substring(ls, h.start).trim
           if (op.nonEmpty) casts += ((ls, h.end, h.group(1), op))
@@ -214,7 +187,7 @@ object EnumTypes {
         if (close > 0) {
           val innerM = m.substring(open + 1, close - 1)
           """(?i)\bAS\s+([A-Za-z_]\w*)\s*\z""".r.findFirstMatchIn(innerM)
-            .filter(am => get(am.group(1)).isDefined)
+            .filter(am => get(st, am.group(1)).isDefined)
             .foreach { am =>
               val operand =
                 cur.substring(open + 1, open + 1 + am.start).trim

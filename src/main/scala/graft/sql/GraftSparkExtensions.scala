@@ -34,7 +34,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftSparkExtensions.vectorNormFn)
     GraftSparkExtensions.duckdbAliasFns.foreach(ext.injectFunction)
     GraftSparkExtensions.tableFunctions.foreach(ext.injectTableFunction)
-    ext.injectParser((_, delegate) => new GraftHintParser(delegate))
+    // One DuckDB-dialect state holder per session (see GraftSessionState).
+    ext.injectCheckRule(session => new GraftSessionState(session))
+    ext.injectParser((session, delegate) => new GraftHintParser(session, delegate))
     // Grouped 1-arg bitstring_agg → column-wide range (ADVICE-18 #1).
     ext.injectOptimizerRule(_ => BitstringGlobalRange)
     // `//` (parsed as ` div `) → DuckDB divide semantics (verdict-19 #5).
@@ -84,10 +86,29 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   * otherwise: statements that parse are untouched, and failures matching
   * no pattern rethrow the original ParseException.
   */
-class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
+class GraftHintParser(session: org.apache.spark.sql.SparkSession,
+    delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
     extends org.apache.spark.sql.catalyst.parser.ParserInterface {
   import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException}
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** This parser's session state; the rewrites below read and write it. */
+  private lazy val st = GraftSessionState.of(session)
+
+  // Evaluated-once extractors for the pre-delegation arms whose rewrite
+  // performs its side effect (DROP, CREATE/DROP TYPE, ALTER) — a
+  // guard-then-get double call would apply it twice.
+  private object TempTableRewritten {
+    def unapply(sql: String): Option[String] =
+      if (TempTableRewrite.isShaped(sql)) TempTableRewrite.rewrite(st, sql)
+      else None
+  }
+  private object EnumDdlRewritten {
+    def unapply(sql: String): Option[String] = EnumTypes.ddlRewrite(st, sql)
+  }
+  private object AlterTableRewritten {
+    def unapply(sql: String): Option[String] = AlterTableRewrite.rewrite(st, sql)
+  }
 
   private val recursiveRe = "(?is).*\\bWITH\\s+RECURSIVE\\b.*".r
   private val usingKeyRe = "(?is).*\\bWITH\\s+RECURSIVE\\b.*\\bUSING\\s+KEY\\b.*".r
@@ -1077,7 +1098,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
         s"false, false, ${ifExists != null})")
     case _ => None
   }
-  // COMMENT ON (temp tables route through the Comments registry; the
+  // COMMENT ON (temp tables record theirs in TempTables; the
   // TABLE form parses natively and is claimed in preRewrite, the COLUMN
   // form never parses and rides the chain).
   private val commentTableRe =
@@ -1277,13 +1298,13 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // PARSE natively but need the pre-delegation rewrites —
             // executes too.
             () => text match { case prepareStmtRe() =>
-              PrepareRewrite.rewrite(text).map(preRewrite); case _ => None },
+              PrepareRewrite.rewrite(st, text).map(preRewrite); case _ => None },
             () => text match { case distinctOnRe() =>
               DistinctOnRewrite.rewrite(text); case _ => None },
             () => text match { case copyStmtRe() =>
               CopyToRewrite.rewrite(text); case _ => None },
             () => text match { case macroRe() =>
-              MacroRewrite.rewrite(text, delegate); case _ => None },
+              MacroRewrite.rewrite(st, text, delegate); case _ => None },
             // struct_pack(a := 1) → named_struct — before the macro
             // named-call lowering (struct_pack has no macro signature
             // and would decline there).
@@ -1292,7 +1313,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // Named-argument macro CALL sites (`f(x, b := 1)`): `:=` is
             // not Spark syntax, so the statement only ever arrives here;
             // lowered to positional against the registered signature.
-            () => MacroRewrite.namedCallRewrite(text),
+            () => MacroRewrite.namedCallRewrite(st, text),
             // DuckDB's in-argument ordered aggregates — string_agg(x,
             // ',' ORDER BY y), list(x ORDER BY y DESC) — onto WITHIN
             // GROUP / the sort-struct lowering. Parse-failure only.
@@ -1328,7 +1349,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             // Registered-enum casts (x::mood, CAST(x AS mood),
             // enum_range folding — parse-failure only: the type word
             // is UNSUPPORTED_DATATYPE).
-            () => EnumTypes.castRewrite(text),
+            () => EnumTypes.castRewrite(st, text),
             // ::JSON / CAST(x AS JSON) — validate-and-preserve for
             // strings, convert-to-JSON-text otherwise.
             () => ListOpRewrite.rewriteJsonCast(text),
@@ -1708,7 +1729,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
   private val describeRe =
     "(?is)\\A\\s*(?:DESCRIBE|DESC)\\s+([A-Za-z_]\\w*)\\s*;?\\s*\\z".r
   private def duckDescribeEnabled: Boolean =
-    try org.apache.spark.sql.SparkSession.active.conf
+    try session.conf
       .getOption("spark.graft.duckdbDescribe").contains("true")
     catch { case scala.util.control.NonFatal(_) => false }
 
@@ -1935,7 +1956,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // it: the guard runs BEFORE the rewrite, so a user UDF call
       // matching the rewritable shape is never silently expanded.
       val userHasColumnsFn =
-        try org.apache.spark.sql.SparkSession.active.sessionState
+        try session.sessionState
           .functionRegistry.functionExists(FunctionIdentifier("columns"))
         catch { case scala.util.control.NonFatal(_) => false }
       if (userHasColumnsFn) sqlText
@@ -2005,7 +2026,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // temp views in analysis — claim it pre-delegation for graft temp
     // tables; catalog tables keep Spark's native comment machinery
     // (duckdb_tables() reads their description as fallback).
-    case commentTableRe(tbl, lit) if TempTables.exists(tbl) =>
+    case commentTableRe(tbl, lit) if TempTables.exists(st, tbl) =>
       s"SELECT * FROM comment_ctl('table', '$tbl', '', $lit)"
     // CREATE TABLE with PRIMARY KEY / UNIQUE: Spark 4.1 parses the
     // constraint but v1 tables reject it in analysis — strip it,
@@ -2077,15 +2098,14 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
     // a temp view — the graft temp-table forms re-materialize the
     // snapshot pre-delegation; catalog tables keep Spark's own ALTER.
     // Evaluated once via the extractor (the rewrite mutates).
-    case AlterTableRewrite.Rewritten(r) => r
+    case AlterTableRewritten(r) => r
     // CREATE OR REPLACE TABLE (non-TEMP — the TEMP form is claimed
     // above) is v2-only in Spark; for an absent or plain-v1 target the
     // DuckDB idiom runs as drop-then-create (atomicity of the native
     // v2 REPLACE is not provided — the drop commits first; documented).
     // DSv2 targets keep Spark's native REPLACE path.
     case createOrReplaceTableRe(name, rest) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      val cat = spark.sessionState.catalog
+      val cat = session.sessionState.catalog
       val ident = org.apache.spark.sql.catalyst.TableIdentifier(name)
       val claim =
         try {
@@ -2120,7 +2140,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
             managedLoc.foreach { uri =>
               val p = new org.apache.hadoop.fs.Path(uri)
               val fs = p.getFileSystem(
-                spark.sessionState.newHadoopConf())
+                session.sessionState.newHadoopConf())
               if (fs.exists(p)) { fs.delete(p, true); () }
             }
         } catch { case scala.util.control.NonFatal(_) => () }
@@ -2133,7 +2153,7 @@ class GraftHintParser(delegate: org.apache.spark.sql.catalyst.parser.ParserInter
       // staged-overwrite TVFs; anything else (plain temp views, DSv2
       // tables, multipart names) keeps Spark's native path and
       // semantics.
-      UpdateDeleteRewrite.rewrite(sqlText).getOrElse(sqlText)
+      UpdateDeleteRewrite.rewrite(st, sqlText).getOrElse(sqlText)
     case _ if indexRewrite(sqlText).isDefined =>
       indexRewrite(sqlText).get
     // DuckDB's session variables (host ≥1.1): SET VARIABLE both creates
@@ -2382,7 +2402,7 @@ object GraftSparkExtensions {
     require(nameE.foldable && nameE.dataType == StringType,
       "graft_enum: the type name must be a constant string")
     val name = nameE.eval(null).toString
-    val vals = graft.sql.EnumTypes.get(name).getOrElse(
+    val vals = EnumTypes.get(GraftSessionState.active, name).getOrElse(
       throw new org.apache.spark.sql.AnalysisException(
         "USER_RAISED_EXCEPTION", Map("errorMessage" ->
           s"Type with name $name does not exist!")))
@@ -3288,7 +3308,7 @@ object GraftSparkExtensions {
           require(a(0).foldable && a(0).dataType == StringType,
             "graft_enum_ord: the type name must be a constant string")
           val name = a(0).eval(null).toString
-          val vals = graft.sql.EnumTypes.get(name).getOrElse(
+          val vals = EnumTypes.get(GraftSessionState.active, name).getOrElse(
             throw new org.apache.spark.sql.AnalysisException(
               "USER_RAISED_EXCEPTION", Map("errorMessage" ->
                 s"Type with name $name does not exist!")))
@@ -3496,8 +3516,10 @@ object GraftSparkExtensions {
         },
         // Sequences (sql/Sequences) — nondeterministic by declaration so
         // CSE/constant folding can't collapse or pre-advance them.
-        aliasFn("nextval", (1, 1))(a => graft.functions.NextVal(a(0))),
-        aliasFn("currval", (1, 1))(a => graft.functions.CurrVal(a(0))),
+        aliasFn("nextval", (1, 1))(a =>
+          graft.functions.NextVal(a(0), GraftSessionState.active.id)),
+        aliasFn("currval", (1, 1))(a =>
+          graft.functions.CurrVal(a(0), GraftSessionState.active.id)),
         // String-similarity scalars (functions/StringSimilarity —
         // DuckDB-1.0-pinned semantics incl. error texts and the
         // 0.7-threshold Winkler boost); StaticInvoke = codegen-inlined.
@@ -5330,6 +5352,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "update_table arguments must be non-NULL constants")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, sum, when}
       val table = asString(v(0))
       val setText = asString(v(1))
@@ -5368,7 +5391,7 @@ object GraftSparkExtensions {
                else when(expr(whereText), newV).otherwise(col(f))).as(f)
           }.getOrElse(col(f))
         }: _*)
-      if (TempTables.exists(table)) TempTables.put(table, projected)
+      if (TempTables.exists(st, table)) TempTables.put(st, table, projected)
       else {
         val (staged, stageDir) = graft.operators.Scratch.materialize(projected, "update_stage")
         staged.write.mode("overwrite").insertInto(table)
@@ -5400,6 +5423,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "delete_returning arguments must be non-NULL constants")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{coalesce, expr, lit}
       val table = asString(v(0))
       val whereText = asString(v(1)).trim
@@ -5417,7 +5441,7 @@ object GraftSparkExtensions {
         if (whereText.isEmpty) lit(false)
         else !coalesce(expr(whereText), lit(false))
       val kept = base.filter(keepPred)
-      if (TempTables.exists(table)) TempTables.put(table, kept)
+      if (TempTables.exists(st, table)) TempTables.put(st, table, kept)
       else {
         val (staged, stageDir) =
           graft.operators.Scratch.materialize(kept, "delete_stage")
@@ -5442,6 +5466,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "update_returning arguments must be non-NULL constants")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{col, expr, when}
       val table = asString(v(0))
       val setText = asString(v(1))
@@ -5476,7 +5501,7 @@ object GraftSparkExtensions {
                else when(expr(whereText), newV).otherwise(col(f))).as(f)
           }.getOrElse(col(f))
         }: _*)
-      if (TempTables.exists(table)) TempTables.put(table, projected)
+      if (TempTables.exists(st, table)) TempTables.put(st, table, projected)
       else {
         val (staged, stageDir) =
           graft.operators.Scratch.materialize(projected, "update_stage")
@@ -5495,6 +5520,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "delete_from arguments must be non-NULL constants")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{coalesce, count, expr, lit, sum, when}
       val table = asString(v(0))
       val whereText = asString(v(1)).trim
@@ -5519,8 +5545,8 @@ object GraftSparkExtensions {
         else base.observe(obs, matched).filter(keepPred)
       val nBefore = if (hasSubquery) base.count() else 0L
       var nKept = 0L
-      if (TempTables.exists(table)) {
-        TempTables.put(table, kept)
+      if (TempTables.exists(st, table)) {
+        TempTables.put(st, table, kept)
         if (hasSubquery) nKept = spark.table(table).count()
       } else {
         val (staged, stageDir) = graft.operators.Scratch.materialize(kept, "delete_stage")
@@ -5563,6 +5589,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "update_from arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{col, first, lit, when}
       val table = asString(v(0))
       val setText = asString(v(1))
@@ -5610,7 +5637,7 @@ object GraftSparkExtensions {
             }.getOrElse(col(f.name))
           }: _*)
         val nMatched = matched.count()
-        if (TempTables.exists(table)) TempTables.put(table, projected)
+        if (TempTables.exists(st, table)) TempTables.put(st, table, projected)
         else {
           val (staged, stageDir) =
             graft.operators.Scratch.materialize(projected, "update_from_stage")
@@ -5638,6 +5665,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "delete_using arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val table = asString(v(0))
       val srcText = asString(v(1)).trim
       val whereText = asString(v(2)).trim
@@ -5649,8 +5677,8 @@ object GraftSparkExtensions {
       val kept = spark.sql(keptSql)
       val nBefore = target.count()
       var nKept = 0L
-      if (TempTables.exists(table)) {
-        TempTables.put(table, kept)
+      if (TempTables.exists(st, table)) {
+        TempTables.put(st, table, kept)
         nKept = spark.table(table).count()
       } else {
         val (staged, stageDir) =
@@ -5681,13 +5709,14 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "temp_table_as arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val name = asString(v(0))
-      if (!asBool(v(2)) && (TempTables.exists(name) ||
+      if (!asBool(v(2)) && (TempTables.exists(st, name) ||
         spark.catalog.tableExists(name)))
         throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION", Map("errorMessage" ->
             s"""Table with name "$name" already exists!"""))
-      TempTables.put(name, spark.sql(asString(v(1))))
+      TempTables.put(st, name, spark.sql(asString(v(1))))
       tempCountRow(spark.table(name).count()) // parquet metadata count
     })
 
@@ -5698,8 +5727,9 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "temp_table_empty arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val name = asString(v(0))
-      if (!asBool(v(2)) && (TempTables.exists(name) ||
+      if (!asBool(v(2)) && (TempTables.exists(st, name) ||
         spark.catalog.tableExists(name)))
         throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION", Map("errorMessage" ->
@@ -5766,7 +5796,7 @@ object GraftSparkExtensions {
         // is considered — a column merely NAMED like an enum is safe.
         val d = {
           val toks = d0.trim.split("\\s+", 3)
-          if (toks.length >= 2 && EnumTypes.get(toks(1)).isDefined)
+          if (toks.length >= 2 && EnumTypes.get(st, toks(1)).isDefined)
             (Seq(toks(0), "STRING") ++ toks.drop(2)).mkString(" ")
           else d0
         }
@@ -5784,10 +5814,10 @@ object GraftSparkExtensions {
       }
       val schema = spark.sessionState.sqlParser.parseTableSchema(
         normalized.mkString(", "))
-      TempTables.put(name, spark.createDataFrame(
+      TempTables.put(st, name, spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
-      if (pkCols.nonEmpty) TempTables.setKeys(name, pkCols)
-      TempTables.setDefaults(name, defaults)
+      if (pkCols.nonEmpty) TempTables.setKeys(st, name, pkCols)
+      TempTables.setDefaults(st, name, defaults)
       LocalRelation.fromExternalRows(
         DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
         Seq.empty)
@@ -5885,11 +5915,12 @@ object GraftSparkExtensions {
     val v = args.map(_.eval(null)).toIndexedSeq
     require(v.forall(_ != null), "insert arguments must be non-NULL")
     val spark = org.apache.spark.sql.SparkSession.active
+    val st = GraftSessionState.of(spark)
     val name = asString(v(0))
     val cols = asString(v(2)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val ret = asString(v(3)).trim
     val target = spark.table(name)
-    val defaults = TempTables.defaultsOf(name)
+    val defaults = TempTables.defaultsOf(st, name)
     val aligned = alignInsert(target,
       spark.sql(substituteDefaultKeyword(
         asString(v(1)), target.schema, cols, defaults)), cols, defaults)
@@ -5930,7 +5961,7 @@ object GraftSparkExtensions {
             org.apache.spark.sql.functions.lit(1)).as("n")),
         s"ins_$name")._1
     }
-    if (intoTemp) TempTables.putLazy(name, target.union(staged))
+    if (intoTemp) TempTables.putLazy(st, name, target.union(staged))
     else staged.write.mode("append").insertInto(name)
     // Literal sources know their row count without a job.
     if (ret.isEmpty) tempCountRow(localRows.getOrElse(
@@ -5967,6 +5998,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "temp_upsert arguments must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       import org.apache.spark.sql.functions.{col, count => fCount, lit}
       val name = asString(v(0))
       val cols = asString(v(2)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -5974,7 +6006,7 @@ object GraftSparkExtensions {
       def fail(msg: String): Nothing =
         throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
-      val isTemp = TempTables.exists(name)
+      val isTemp = TempTables.exists(st, name)
       // Catalog (non-temp) tables execute too (round 17): the upsert is
       // the staged-INSERT-OVERWRITE recipe run mechanically. tableExists
       // on the session catalog sees persistent tables, not temp views —
@@ -6006,7 +6038,7 @@ object GraftSparkExtensions {
       // format with a real commit protocol (Iceberg/Delta MERGE), where
       // the same staged plan commits atomically.
       def commit(df: org.apache.spark.sql.DataFrame): Unit =
-        if (isTemp) TempTables.put(name, df)
+        if (isTemp) TempTables.put(st, name, df)
         else {
           val (merged, _) = graft.operators.Scratch.materialize(
             df.select(target.columns.map(col).toIndexedSeq: _*),
@@ -6016,7 +6048,7 @@ object GraftSparkExtensions {
       val keys = {
         val stated = asString(v(3)).split(",").map(_.trim).filter(_.nonEmpty).toSeq
         if (stated.nonEmpty) stated
-        else TempTables.keysOf(name).getOrElse(fail(
+        else TempTables.keysOf(st, name).getOrElse(fail(
           s"'$name' has no PRIMARY KEY declared and the statement names no " +
             "conflict target — declare one (CREATE [TEMP] TABLE t (id " +
             "INTEGER PRIMARY KEY, ...)) or use ON CONFLICT (cols) DO " +
@@ -6026,7 +6058,7 @@ object GraftSparkExtensions {
         target.schema.fieldNames.exists(_.equalsIgnoreCase(k)))
       if (missing.nonEmpty)
         fail(s"conflict target column(s) not in '$name': ${missing.mkString(", ")}")
-      val upsDefaults = TempTables.defaultsOf(name)
+      val upsDefaults = TempTables.defaultsOf(st, name)
       val aligned = alignInsert(target,
         spark.sql(substituteDefaultKeyword(
           asString(v(1)), target.schema, cols, upsDefaults)),
@@ -6076,7 +6108,7 @@ object GraftSparkExtensions {
           val (freshStaged, _) =
             graft.operators.Scratch.materialize(fresh, s"upsf_$name")
           val nFresh = obsF.get("n").asInstanceOf[Long]
-          if (isTemp) TempTables.put(name, target.unionByName(freshStaged))
+          if (isTemp) TempTables.put(st, name, target.unionByName(freshStaged))
           else // catalog: conflicts lose, so only the fresh rows APPEND
             freshStaged.select(target.columns.map(col).toIndexedSeq: _*)
               .write.mode("append").insertInto(name)
@@ -6236,11 +6268,12 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "export_database path must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val dir = asString(v(0)).stripSuffix("/")
       val catalogTables = spark.sessionState.catalog
         .listTables(spark.sessionState.catalog.getCurrentDatabase)
         .filter(_.database.isDefined).map(_.table)
-      val tempTables = TempTables.names()
+      val tempTables = TempTables.names(st)
       val all = (catalogTables ++ tempTables).distinct.sorted
       // Tables export as INDEPENDENT concurrent jobs (guide §2.6): a
       // serial per-table loop leaves the cluster idle in every table's
@@ -6293,6 +6326,7 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       require(v.forall(_ != null), "import_database path must be non-NULL")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val dir = asString(v(0)).stripSuffix("/")
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -6301,7 +6335,7 @@ object GraftSparkExtensions {
       require(entries.nonEmpty, s"import_database: no *.parquet entries under $dir")
       entries.foreach { e =>
         val name = e.stripSuffix(".parquet")
-        TempTables.put(name, spark.read.parquet(s"$dir/$e"))
+        TempTables.put(st, name, spark.read.parquet(s"$dir/$e"))
       }
       // DuckDB's IMPORT reports the last restored table's row count —
       // one metadata-only parquet count, not one per table.
@@ -6354,7 +6388,8 @@ object GraftSparkExtensions {
         "pragma_table_info(table) — one constant string")
       val tbl = asString(args.head.eval(null))
       val spark = org.apache.spark.sql.SparkSession.active
-      val pkCols = TempTables.keysOf(tbl).getOrElse(Nil).map(_.toLowerCase).toSet
+      val st = GraftSessionState.of(spark)
+      val pkCols = TempTables.keysOf(st, tbl).getOrElse(Nil).map(_.toLowerCase).toSet
       val rows = spark.table(tbl).schema.zipWithIndex.map { case (f, i) =>
         val isPk = pkCols.contains(f.name.toLowerCase)
         org.apache.spark.sql.Row(i, f.name, duckTypeName(f.dataType),
@@ -6388,10 +6423,11 @@ object GraftSparkExtensions {
     (FunctionIdentifier("txn_ctl"), info("txn_ctl"), (args: Seq[Expression]) => {
       require(args.size == 1 && args.head.foldable,
         "txn_ctl(op) — one constant string: begin|commit|rollback")
+      val st = GraftSessionState.active
       asString(args.head.eval(null)) match {
-        case "begin" => TempTables.txnBegin()
-        case "commit" => TempTables.txnCommit()
-        case "rollback" => TempTables.txnRollback()
+        case "begin" => TempTables.txnBegin(st)
+        case "commit" => TempTables.txnCommit(st)
+        case "rollback" => TempTables.txnRollback(st)
         case other => throw new IllegalArgumentException(
           s"txn_ctl: unknown operation '$other' (begin|commit|rollback)")
       }
@@ -6401,7 +6437,7 @@ object GraftSparkExtensions {
     })
 
   /** COMMENT ON TABLE/COLUMN side effects for temp tables
-    * ([[Comments]]); empty result like DuckDB's DDL. Missing
+    * ([[TempTables.setComment]]); empty result like DuckDB's DDL. Missing
     * table/column errors mirror DuckDB's Catalog Error.
     */
   val commentCtlFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
@@ -6416,13 +6452,13 @@ object GraftSparkExtensions {
         throw new IllegalStateException(
           s"Catalog Error: Table with name $tbl does not exist!")
       kind match {
-        case "table" => Comments.setTable(tbl, comment)
+        case "table" => TempTables.setComment(GraftSessionState.of(spark), tbl, comment)
         case "column" =>
           if (!spark.table(tbl).schema.fieldNames
               .exists(_.equalsIgnoreCase(colName)))
             throw new IllegalStateException(
               s"""Catalog Error: Column with name $colName does not exist!""")
-          Comments.setColumn(tbl, colName, comment)
+          TempTables.setColumnComment(GraftSessionState.of(spark), tbl, colName, comment)
         case other => throw new IllegalArgumentException(
           s"comment_ctl: unknown kind '$other'")
       }
@@ -6444,8 +6480,9 @@ object GraftSparkExtensions {
       val v = args.map(_.eval(null)).toIndexedSeq
       val (name, keysCsv, ddl) = (asString(v(0)), asString(v(1)), asString(v(2)))
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       spark.sql(ddl).collect() // throws on failure; keys stay unregistered
-      TempTables.setKeys(name, keysCsv.split(",").map(_.trim).toSeq)
+      TempTables.setKeys(st, name, keysCsv.split(",").map(_.trim).toSeq)
       LocalRelation.fromExternalRows(
         DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
         Seq.empty)
@@ -6461,21 +6498,14 @@ object GraftSparkExtensions {
     * through this lane anyway. DETACH drops the database (CASCADE;
     * external tables: files untouched). Eager ctl TVFs, the
     * TempTables/catalog_pk_ctl pattern: work happens once at analysis,
-    * result is DuckDB's empty Count shape.
+    * result is DuckDB's empty Count shape. The session records the
+    * names it attached ([[GraftSessionState.attached]]), and DETACH
+    * drops only those: the host refuses to DETACH anything that was not
+    * ATTACHed ("Failed to detach database with name "s1": database not
+    * found" — probed v1.0.0, including for CREATE SCHEMA schemas), and
+    * without the record a DETACH of a user-created database would DROP
+    * ... CASCADE managed table data (round-19 ADVICE).
     */
-  /** Names attach_db created, keyed per session. DETACH may only drop
-    * names in this set: the host refuses to DETACH anything that was
-    * not ATTACHed ("Failed to detach database with name "s1": database
-    * not found" — probed v1.0.0, including for CREATE SCHEMA schemas),
-    * and without the registry a DETACH of a user-created database would
-    * DROP ... CASCADE managed table data (round-19 ADVICE).
-    */
-  private val attachedDbs: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def attachKey(spark: org.apache.spark.sql.SparkSession,
-      name: String): String =
-    java.lang.System.identityHashCode(spark) + "/" + name.toLowerCase
-
   val attachDbFn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier("attach_db"), info("attach_db"), (args: Seq[Expression]) => {
       require(args.size == 3 && args.forall(_.foldable),
@@ -6514,7 +6544,7 @@ object GraftSparkExtensions {
           spark.sql(s"CREATE TABLE `$name`.`$tbl` USING parquet " +
             s"LOCATION '${p.toString.replace("'", "''")}'")
         }
-        attachedDbs.add(attachKey(spark, name))
+        GraftSessionState.of(spark).attached.add(name.toLowerCase)
       }
       LocalRelation.fromExternalRows(
         DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
@@ -6532,14 +6562,15 @@ object GraftSparkExtensions {
       // user-created database (CREATE SCHEMA + managed tables) gets the
       // host's not-found error instead of a silent CASCADE drop of its
       // managed data (round-19 ADVICE; host message probed v1.0.0).
-      if (!attachedDbs.contains(attachKey(spark, name)) ||
+      val attached = GraftSessionState.of(spark).attached
+      if (!attached.contains(name.toLowerCase) ||
           !spark.catalog.databaseExists(name)) {
         if (!ifExists) throw new org.apache.spark.sql.AnalysisException(
           "USER_RAISED_EXCEPTION", Map("errorMessage" ->
             s"""Failed to detach database with name "$name": database not found"""))
       } else {
         spark.sql(s"DROP DATABASE `$name` CASCADE")
-        attachedDbs.remove(attachKey(spark, name))
+        attached.remove(name.toLowerCase)
       }
       LocalRelation.fromExternalRows(
         DataTypeUtils.toAttributes(StructType.fromDDL("Count BIGINT")),
@@ -6559,8 +6590,9 @@ object GraftSparkExtensions {
     (FunctionIdentifier("duckdb_tables"), info("duckdb_tables"), (args: Seq[Expression]) => {
       require(args.isEmpty, "duckdb_tables() takes no arguments")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val rows = spark.catalog.listTables().collect().sortBy(_.name).map { t =>
-        val comment = Comments.tableComment(t.name)
+        val comment = TempTables.comment(st, t.name)
           .orElse(Option(t.description).filter(_.nonEmpty))
         org.apache.spark.sql.Row(
           if (t.isTemporary) "temp" else Option(t.database).getOrElse("memory"),
@@ -6583,6 +6615,7 @@ object GraftSparkExtensions {
     (FunctionIdentifier("duckdb_columns"), info("duckdb_columns"), (args: Seq[Expression]) => {
       require(args.isEmpty, "duckdb_columns() takes no arguments")
       val spark = org.apache.spark.sql.SparkSession.active
+      val st = GraftSessionState.of(spark)
       val rows = spark.catalog.listTables().collect().sortBy(_.name).flatMap { t =>
         val schema =
           try spark.table(t.name).schema
@@ -6592,7 +6625,7 @@ object GraftSparkExtensions {
           org.apache.spark.sql.Row(
             if (t.isTemporary) "temp" else Option(t.database).getOrElse("memory"),
             "main", t.name, f.name, i + 1, duckTypeName(f.dataType),
-            Comments.columnComment(t.name, f.name).orNull)
+            TempTables.columnComment(st, t.name, f.name).orNull)
         }
       }
       LocalRelation.fromExternalRows(
@@ -6611,15 +6644,16 @@ object GraftSparkExtensions {
       def optLong(x: Any): Option[Long] = {
         val s = asString(x); if (s.isEmpty) None else Some(s.toLong)
       }
+      val st = GraftSessionState.active
       asString(v(0)) match {
-        case "create" => Sequences.create(asString(v(1)),
+        case "create" => Sequences.create(st, asString(v(1)),
           start = optLong(v(2)),
           increment = asString(v(3)).toLong,
           minValue = optLong(v(4)), maxValue = optLong(v(5)),
           cycle = v(6).toString.toBoolean,
           orReplace = v(7).toString.toBoolean,
           ifNotExists = v(8).toString.toBoolean)
-        case "drop" => Sequences.drop(asString(v(1)),
+        case "drop" => Sequences.drop(st, asString(v(1)),
           ifExists = v(8).toString.toBoolean)
         case other => throw new IllegalArgumentException(
           s"seq_ctl: unknown operation '$other'")

@@ -95,28 +95,6 @@ object MacroRewrite {
       case _ => false
     }))
 
-  /** Session-scoped (name → ordered (param, defaultText)) signatures of
-    * registered macros — what [[namedCallRewrite]] needs to lower
-    * DuckDB's named CALL syntax (`f(x, b := 1)`) to positional before
-    * delegation. Overload lists are not recorded (no defaults, and
-    * arity dispatch makes name→slot mapping ambiguous).
-    */
-  private val signatures = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Vector[(String, Option[String])]]()
-
-  private def recordSignature(
-      name: String, params: Vector[(String, Option[String])]): Unit =
-    try {
-      signatures.put(
-        (org.apache.spark.sql.SparkSession.active, name.toLowerCase), params)
-      ()
-    } catch { case NonFatal(_) => () }
-
-  private def signatureOf(name: String): Option[Vector[(String, Option[String])]] =
-    try Option(signatures.get(
-      (org.apache.spark.sql.SparkSession.active, name.toLowerCase)))
-    catch { case NonFatal(_) => None }
-
   /** Lower DuckDB named-argument CALL sites of registered macros —
     * `cents_of(x, f := 10)` — to positional calls: positionals bind the
     * leading parameters in order, named arguments bind their slot, and
@@ -124,7 +102,10 @@ object MacroRewrite {
     * when a later slot is filled, omitted when trailing). `:=` is not
     * Spark syntax, so this only ever runs on parse failure and can never
     * claim a native statement; calls to names without a recorded
-    * signature decline (nothing safe to reorder against).
+    * signature decline (nothing safe to reorder against). Signatures
+    * (name → ordered (param, defaultText)) live in the session's holder
+    * ([[GraftSessionState.macros]]); overload lists are not recorded
+    * (arity dispatch makes name→slot mapping ambiguous).
     */
   /** `:=` present at paren-depth 0 of an ALREADY-MASKED text — a named
     * argument of THIS call, not of a call nested inside an argument.
@@ -132,7 +113,7 @@ object MacroRewrite {
   private def topLevelNamedOp(masked: String): Boolean =
     SqlLexer.topLevel(masked)(masked.startsWith(":=", _)).nonEmpty
 
-  def namedCallRewrite(text: String): Option[String] = {
+  def namedCallRewrite(st: GraftSessionState, text: String): Option[String] = {
     if (!text.contains(":=")) return None
     var cur = text
     var changed = false
@@ -158,7 +139,8 @@ object MacroRewrite {
       hit match {
         case None => return if (changed) Some(cur) else None
         case Some((fname, nameStart, open, close)) =>
-          val params = signatureOf(fname).getOrElse(return None)
+          val params =
+            Option(st.macros.get(fname.toLowerCase)).getOrElse(return None)
           val inner = cur.substring(open + 1, close - 1)
           val args = SqlLexer.splitTop(inner).map(_.trim)
           val lowered = params.map(_._1.toLowerCase)
@@ -195,7 +177,8 @@ object MacroRewrite {
     if (changed) Some(cur) else None
   }
 
-  def rewrite(sql: String, delegate: ParserInterface): Option[String] = {
+  def rewrite(st: GraftSessionState, sql: String,
+      delegate: ParserInterface): Option[String] = {
     val m = headRe.findFirstMatchIn(sql).getOrElse(return None)
     val orReplace = m.group(1) != null
     val name = m.group(2)
@@ -232,7 +215,7 @@ object MacroRewrite {
     if (segs.size > 1 &&
       """(?is)\bAS\s+TABLE\b""".r.findFirstIn(segs.head).isEmpty &&
       segs.tail.forall(overloadSeg))
-      return overloads(name, orReplace, segs, delegate)
+      return overloads(st, name, orReplace, segs, delegate)
 
     // Parameter list: identifiers, optionally with a trailing run of
     // `name := <default-expr>` slots (DuckDB's default parameters). Types
@@ -275,7 +258,8 @@ object MacroRewrite {
     if (body0.isEmpty) return None
     val tableM = """(?is)\ATABLE\b""".r.findFirstMatchIn(body0)
     if (tableM.isDefined)
-      return tableMacro(name, orReplace, body0.substring(tableM.get.end).trim,
+      return tableMacro(st, name, orReplace,
+        body0.substring(tableM.get.end).trim,
         params.map(p => (p.name, p.default)), delegate)
     if (",\\s*\\(".r.findFirstIn(body0).isDefined &&
       """(?is),\s*\([A-Za-z_,\s\w]*\)\s*AS\b""".r.findFirstIn(body0).isDefined)
@@ -325,9 +309,7 @@ object MacroRewrite {
       Map("errorMessage" ->
         s"macro '$name' references itself — recursive macros are not supported"))
 
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.functionRegistry
+    val registry = st.session.sessionState.functionRegistry
     val fid = FunctionIdentifier(name.toLowerCase)
     if (!orReplace && registry.functionExists(fid))
       throw new org.apache.spark.sql.AnalysisException(
@@ -368,7 +350,7 @@ object MacroRewrite {
     }
     registry.registerFunction(fid,
       new ExpressionInfo(classOf[GraftSparkExtensions].getName, name), builder)
-    recordSignature(name, params.map(p => (p.name, p.default)))
+    st.macros.put(name.toLowerCase, params.map(p => (p.name, p.default)))
     Some(s"SELECT '$name' AS `macro`")
   }
 
@@ -383,7 +365,8 @@ object MacroRewrite {
     * subquery/self-reference/default-referencing-parameter guards as
     * the single form, applied per overload.
     */
-  private def overloads(name: String, orReplace: Boolean, segs: Vector[String],
+  private def overloads(st: GraftSessionState, name: String,
+      orReplace: Boolean, segs: Vector[String],
       delegate: ParserInterface): Option[String] = {
     val identRe = """\A[A-Za-z_][A-Za-z0-9_]*\z""".r
     // One overload: ordered parameter names, default templates for the
@@ -458,9 +441,7 @@ object MacroRewrite {
       if (ranges(i)._1 <= ranges(j)._2 && ranges(j)._1 <= ranges(i)._2)
         return None
 
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.functionRegistry
+    val registry = st.session.sessionState.functionRegistry
     val fid = FunctionIdentifier(name.toLowerCase)
     if (!orReplace && registry.functionExists(fid))
       throw new org.apache.spark.sql.AnalysisException(
@@ -509,7 +490,8 @@ object MacroRewrite {
     * t` called as shadow(99) yields 99 per row there too. Trailing
     * defaults pad positionally, as in the scalar form.
     */
-  private def tableMacro(name: String, orReplace: Boolean, query: String,
+  private def tableMacro(st: GraftSessionState, name: String,
+      orReplace: Boolean, query: String,
       params: Vector[(String, Option[String])],
       delegate: ParserInterface): Option[String] = {
     if (query.isEmpty) return None
@@ -545,9 +527,7 @@ object MacroRewrite {
       val i = params.indexWhere(_._2.isDefined)
       if (i < 0) params.size else i
     }
-    val spark = try org.apache.spark.sql.SparkSession.active
-      catch { case NonFatal(_) => return None }
-    val registry = spark.sessionState.tableFunctionRegistry
+    val registry = st.session.sessionState.tableFunctionRegistry
     val fid = FunctionIdentifier(name.toLowerCase)
     if (!orReplace && registry.functionExists(fid))
       throw new org.apache.spark.sql.AnalysisException(
@@ -583,7 +563,7 @@ object MacroRewrite {
           }
         }
       })
-    recordSignature(name, params)
+    st.macros.put(name.toLowerCase, params)
     Some(s"SELECT '$name' AS `macro`")
   }
 }

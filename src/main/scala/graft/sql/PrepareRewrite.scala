@@ -8,8 +8,10 @@ import scala.util.control.NonFatal
   * DuckDB 1.0 oracle too, so the lane is literal-oracle-able).
   *
   * Spark parses none of the three, so all ride the hint parser's
-  * failure chain. PREPARE stores the statement TEXT as a session-keyed
-  * template (replacing silently, as DuckDB does) and returns a 1-row
+  * failure chain. PREPARE stores the statement TEXT as a template in
+  * the session's holder ([[GraftSessionState.prepared]] — gone with the
+  * session, like DuckDB's connection-scoped registry; replacing
+  * silently, as DuckDB does) and returns a 1-row
   * marker like [[MacroRewrite]]'s DDL forms; EXECUTE splices the call's
   * argument expression texts into the template's `$N` / positional `?`
   * markers (quote/comment-aware, each argument parenthesized) and hands
@@ -19,13 +21,8 @@ import scala.util.control.NonFatal
   * the constant arguments EXECUTE takes, the two are equivalent; a
   * non-constant argument simply evaluates per row at its splice sites.
   *
-  * Registry is session-keyed (a plain ConcurrentHashMap on the
-  * SparkSession — entries are small template STRINGS, but the session
-  * key itself is strongly retained, so a service that churns through
-  * thousands of short-lived sessions with prepared statements should
-  * DEALLOCATE or accept the retained keys; DuckDB's registry is
-  * connection-scoped the same way). Wrong argument count and unknown
-  * names raise clean errors, matching DuckDB's binder.
+  * Wrong argument count and unknown names raise clean errors, matching
+  * DuckDB's binder.
   */
 object PrepareRewrite {
 
@@ -36,25 +33,19 @@ object PrepareRewrite {
   private val deallocateRe =
     """(?is)\A\s*DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_]\w*)\s*;?\s*\z""".r
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
   private def fail(msg: String): Nothing =
     throw new org.apache.spark.sql.AnalysisException(
       "USER_RAISED_EXCEPTION", Map("errorMessage" -> msg))
 
-  def rewrite(sql: String): Option[String] = sql match {
+  def rewrite(st: GraftSessionState, sql: String): Option[String] = sql match {
     case prepareRe(name, body) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      registry.put((spark, name.toLowerCase), body.trim)
+      st.prepared.put(name.toLowerCase, body.trim)
       Some(s"SELECT '${name.toLowerCase}' AS `prepare`")
     case deallocateRe(name) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      registry.remove((spark, name.toLowerCase))
+      st.prepared.remove(name.toLowerCase)
       Some(s"SELECT '${name.toLowerCase}' AS `deallocate`")
     case executeRe(name, argText) =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      val template = registry.get((spark, name.toLowerCase))
+      val template = st.prepared.get(name.toLowerCase)
       if (template == null)
         fail(s"""Prepared statement "${name.toLowerCase}" does not exist""")
       val args =

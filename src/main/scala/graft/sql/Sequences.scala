@@ -1,7 +1,5 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
-
 /** Session-scoped sequences — DuckDB's `CREATE SEQUENCE` / `nextval` /
   * `currval` surface (reference host engine; semantics pinned on 1.0:
   * START/INCREMENT options, MINVALUE/MAXVALUE bounds with [NO] CYCLE
@@ -21,18 +19,23 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale contract, stated not hidden: a sequence is a single atomic
   * counter — inherently serialized state, exactly as single-node DuckDB
-  * runs it. Counters live in this JVM keyed by session; driver-side
-  * evaluation (constant select lists, small local relations — the shapes
-  * scripts use sequences for) is exact. A `nextval` inside a distributed
+  * runs it. Counters live in the driver JVM, in the holder of the
+  * session that created them ([[GraftSessionState.sequences]]), and die
+  * with that session. `nextval`/`currval` carry the analyzing session's
+  * holder id into the task, so evaluation on an executor thread of the
+  * same JVM (local mode, driver-side relations — the shapes scripts use
+  * sequences for) advances exactly that session's counter, whichever
+  * session last ran on the thread. A `nextval` inside a distributed
   * scan serializes every row through one counter — DuckDB pays the same
   * cost on its single node, but at cluster scale the right tool is
   * `monotonically_increasing_id()`/`uuid()`, which the missing-sequence
-  * error text points at. Values are unique and strictly advancing, never
+  * error text points at; a remote executor has no holder and fails with
+  * a named error. Values are unique and strictly advancing, never
   * gap-free under retries (same as any sequence under task retry).
   */
 object Sequences {
 
-  private final class State(val increment: Long, start: Long,
+  private[sql] final class Sequence(val increment: Long, start: Long,
       minV: Long, maxV: Long, cycle: Boolean) {
     private var nextV: Long = start
     private var pastBound = false // advance overflowed Long
@@ -59,44 +62,39 @@ object Sequences {
     }
   }
 
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), State]()
-
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
-
-  def create(name: String, start: Option[Long] = None, increment: Long = 1L,
+  def create(st: GraftSessionState, name: String,
+      start: Option[Long] = None, increment: Long = 1L,
       minValue: Option[Long] = None, maxValue: Option[Long] = None,
       cycle: Boolean = false, orReplace: Boolean = false,
       ifNotExists: Boolean = false): Unit = {
     val asc = increment >= 0
     val minV = minValue.getOrElse(if (asc) 1L else Long.MinValue)
     val maxV = maxValue.getOrElse(if (asc) Long.MaxValue else -1L)
-    val st = start.getOrElse(if (asc) minV else maxV)
+    val first = start.getOrElse(if (asc) minV else maxV)
     // DuckDB validates START against the bounds at CREATION (Parser
     // Error), not lazily at first nextval.
-    if (st > maxV) throw new IllegalStateException(
-      s"Parser Error: START value ($st) cannot be greater than MAXVALUE ($maxV)")
-    if (st < minV) throw new IllegalStateException(
-      s"Parser Error: START value ($st) cannot be less than MINVALUE ($minV)")
-    val k = key(name)
-    if (registry.containsKey(k) && !orReplace) {
+    if (first > maxV) throw new IllegalStateException(
+      s"Parser Error: START value ($first) cannot be greater than MAXVALUE ($maxV)")
+    if (first < minV) throw new IllegalStateException(
+      s"Parser Error: START value ($first) cannot be less than MINVALUE ($minV)")
+    val k = name.toLowerCase
+    if (st.sequences.containsKey(k) && !orReplace) {
       if (ifNotExists) return
       throw new IllegalStateException(
         s"""Catalog Error: Sequence with name "$name" already exists!""")
     }
-    registry.put(k, new State(increment, st, minV, maxV, cycle))
+    st.sequences.put(k, new Sequence(increment, first, minV, maxV, cycle))
     ()
   }
 
-  def drop(name: String, ifExists: Boolean = false): Unit = {
-    if (registry.remove(key(name)) == null && !ifExists)
+  def drop(st: GraftSessionState, name: String, ifExists: Boolean = false): Unit = {
+    if (st.sequences.remove(name.toLowerCase) == null && !ifExists)
       throw new IllegalStateException(
         s"Catalog Error: Sequence with name $name does not exist!")
   }
 
-  private def lookup(name: String): State = {
-    val s = registry.get(key(name))
+  private def lookup(st: GraftSessionState, name: String): Sequence = {
+    val s = st.sequences.get(name.toLowerCase)
     if (s == null)
       throw new IllegalStateException(
         s"Catalog Error: Sequence with name $name does not exist! " +
@@ -105,10 +103,11 @@ object Sequences {
     s
   }
 
-  def nextval(name: String): Long = lookup(name).nextval(name)
+  def nextval(st: GraftSessionState, name: String): Long =
+    lookup(st, name).nextval(name)
 
-  def currval(name: String): Long = {
-    val s = lookup(name)
+  def currval(st: GraftSessionState, name: String): Long = {
+    val s = lookup(st, name)
     if (!s.defined)
       throw new IllegalStateException(
         "Sequence Error: currval: sequence is not yet defined in this session")

@@ -33,16 +33,6 @@ import scala.util.control.NonFatal
   * pre-delegation side effect, like POSITIONAL JOIN's collapse) and
   * returns DuckDB's empty result via a zero-row marker.
   */
-/** Single-evaluation extractor for the pre-delegation match (DROP's
-  * registry removal is a side effect — the rewrite must run exactly
-  * once per statement).
-  */
-object TempTableRewritten {
-  def unapply(sql: String): Option[String] =
-    if (TempTableRewrite.isShaped(sql)) TempTableRewrite.rewrite(sql)
-    else None
-}
-
 object TempTableRewrite {
 
   private val createRe =
@@ -75,12 +65,10 @@ object TempTableRewrite {
   /** Persistent-catalog presence (NOT temp views — a view upsert must
     * keep DuckDB's error shape, raised by the TVF).
     */
-  private def catalogHas(name: String): Boolean =
-    try {
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(name))
-    } catch { case NonFatal(_) => false }
+  private def catalogHas(st: GraftSessionState, name: String): Boolean =
+    try st.session.sessionState.catalog.tableExists(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+    catch { case NonFatal(_) => false }
 
   /** Optional leading column list: a parenthesized ident CSV followed
     * by MORE text (a bare `(SELECT ...)` body has no trailing text
@@ -100,7 +88,7 @@ object TempTableRewrite {
       else Some((Seq.empty[String], body0))
     } else Some((Seq.empty[String], body0))
 
-  def rewrite(sql: String): Option[String] =
+  def rewrite(st: GraftSessionState, sql: String): Option[String] =
     try {
       sql match {
         case createRe(orReplace, name, query) =>
@@ -109,10 +97,10 @@ object TempTableRewrite {
         case createColsRe(orReplace, name, colDefs) =>
           Some(s"SELECT * FROM temp_table_empty('${esc(name)}', " +
             s"'${esc(colDefs.trim)}', ${orReplace != null})")
-        case dropRe(ifExists, name) if TempTables.exists(name) =>
+        case dropRe(ifExists, name) if TempTables.exists(st, name) =>
           // Side effect here (pre-delegation is deterministic); the
           // marker select returns DuckDB's empty result.
-          TempTables.drop(name)
+          TempTables.drop(st, name)
           Some("SELECT CAST(NULL AS BIGINT) AS Count WHERE 1 = 0")
         case insertOrRe(modeWord, name, rest) =>
           // INSERT OR REPLACE / OR IGNORE — keyed upsert against the
@@ -120,7 +108,7 @@ object TempTableRewrite {
           // catalog tables (the upsert TVF runs the staged
           // INSERT-OVERWRITE recipe there; the PK comes from the
           // constraint-stripping CREATE TABLE claim).
-          if (!TempTables.exists(name) && !catalogHas(name)) return None
+          if (!TempTables.exists(st, name) && !catalogHas(st, name)) return None
           val words = SqlLexer.topLevelWords(rest)
           if (words.exists(_._1 == "?")) return None
           // RETURNING / an explicit ON CONFLICT on top of the shorthand
@@ -141,7 +129,7 @@ object TempTableRewrite {
                 Some(rest.substring(pos + "RETURNING".length).trim))
             case None => (rest.trim, None)
           }
-          val isTemp = TempTables.exists(name)
+          val isTemp = TempTables.exists(st, name)
           // BY NAME into a temp table has no lane here; native/hint path.
           if (body0.toUpperCase.startsWith("BY NAME")) return None
           // ON CONFLICT [(cols)] DO NOTHING — the explicit conflict
@@ -155,7 +143,7 @@ object TempTableRewrite {
           }
           conflictAt match {
             case Some(pos) =>
-              if ((!isTemp && !catalogHas(name)) || returning.isDefined)
+              if ((!isTemp && !catalogHas(st, name)) || returning.isDefined)
                 return None
               val clause = body0.substring(pos).trim
               val headRe = ("(?is)\\AON\\s+CONFLICT\\s*" +
@@ -194,15 +182,8 @@ object TempTableRewrite {
               }
             case None =>
               if (!isTemp && returning.isEmpty) return None // native INSERT
-              if (!isTemp) {
-                // Catalog table + RETURNING.
-                val cat = try {
-                  val spark = org.apache.spark.sql.SparkSession.active
-                  spark.sessionState.catalog.tableExists(
-                    org.apache.spark.sql.catalyst.TableIdentifier(name))
-                } catch { case NonFatal(_) => false }
-                if (!cat) return None
-              }
+              // Catalog table + RETURNING.
+              if (!isTemp && !catalogHas(st, name)) return None
               val (cols, body) = splitColsBody(body0).getOrElse(return None)
               val fn = if (isTemp) "temp_insert" else "insert_returning"
               Some(s"SELECT * FROM $fn('${esc(name)}', '${esc(body)}', " +

@@ -1,6 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 
 /** Session-scoped MATERIALIZED temp tables — the semantics DuckDB's
   * `CREATE TEMP TABLE` carries and Spark lacks (a TEMPORARY VIEW is a
@@ -22,52 +24,76 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TempTables {
 
-  /** Table content: Left(scratch dir) for parquet-backed snapshots,
-    * Right(frozen LocalRelation DataFrame) for small ones (see [[put]]).
+  /** One table's record in its session's holder
+    * ([[GraftSessionState.tables]]). `content` is Left(scratch dir) for
+    * parquet-backed snapshots, Right(frozen LocalRelation DataFrame) for
+    * small ones (see [[put]]), and None for a metadata-only record — a
+    * declared key or a COMMENT ON a catalog table or plain view.
+    * `keys` are the declared PRIMARY KEY columns: the conflict target
+    * INSERT OR REPLACE / OR IGNORE resolve against when the statement
+    * names none (advisory: reads don't enforce it; the upsert TVF
+    * rejects duplicate keys like DuckDB's constraint). `defaults` maps
+    * a lowercased column to its DEFAULT's SQL text, compiled per insert
+    * as DuckDB evaluates it. `pending` is the lazy-append depth (see
+    * [[putLazy]]). A transaction snapshot is a copy of the record map,
+    * so ROLLBACK restores all of it.
     */
-  private val registry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Either[String, DataFrame]]()
+  final case class Table(
+      content: Option[Either[String, DataFrame]] = None,
+      keys: Option[Seq[String]] = None,
+      defaults: Map[String, String] = Map.empty,
+      pending: Int = 0,
+      comment: Option[String] = None,
+      columnComments: Map[String, String] = Map.empty)
 
-  /** Declared PRIMARY KEY columns (CREATE TEMP TABLE ... PRIMARY KEY) —
-    * the conflict target INSERT OR REPLACE / OR IGNORE resolve against
-    * when the statement names none. Advisory: reads don't enforce it;
-    * the upsert TVF rejects duplicate keys like DuckDB's constraint.
-    */
-  private val pkRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[String]]()
+  private def record(st: GraftSessionState, name: String): Table =
+    Option(st.tables.get(name.toLowerCase)).getOrElse(Table())
 
-  private def key(name: String): (SparkSession, String) =
-    (SparkSession.active, name.toLowerCase)
-
-  def setKeys(name: String, cols: Seq[String]): Unit = {
-    pkRegistry.put(key(name), cols)
+  private def update(st: GraftSessionState, name: String)(f: Table => Table): Unit = {
+    st.tables.compute(name.toLowerCase,
+      (_, t) => f(Option(t).getOrElse(Table())))
     ()
   }
 
-  def keysOf(name: String): Option[Seq[String]] =
-    Option(pkRegistry.get(key(name)))
+  def setKeys(st: GraftSessionState, name: String, cols: Seq[String]): Unit =
+    update(st, name)(_.copy(keys = Some(cols)))
 
-  /** Declared column DEFAULT expressions (round 18): column-name
-    * (lowercased) → the default's SQL text, recorded by CREATE TEMP
-    * TABLE and applied by INSERTs that omit the column or write the
-    * DEFAULT keyword. DuckDB evaluates the expression per insert —
-    * these are raw SQL texts compiled at insert time, not frozen
-    * values.
+  def keysOf(st: GraftSessionState, name: String): Option[Seq[String]] =
+    record(st, name).keys
+
+  def setDefaults(st: GraftSessionState, name: String,
+      defs: Map[String, String]): Unit =
+    if (defs.nonEmpty) update(st, name)(_.copy(defaults = defs))
+
+  def defaultsOf(st: GraftSessionState, name: String): Map[String, String] =
+    record(st, name).defaults
+
+  /** COMMENT ON TABLE / COLUMN metadata (DuckDB semantics pinned on 1.0:
+    * IS NULL clears, commenting a missing table is a Catalog Error).
+    * Catalog tables keep Spark's own comment machinery as well; this
+    * serves the temp views Spark's native COMMENT ON rejects, surfaced
+    * through `duckdb_tables()` / `duckdb_columns()`.
     */
-  private val defaultsRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[String, String]]()
+  def setComment(st: GraftSessionState, name: String, c: Option[String]): Unit =
+    update(st, name)(_.copy(comment = c))
 
-  def setDefaults(name: String, defs: Map[String, String]): Unit = {
-    if (defs.nonEmpty) defaultsRegistry.put(key(name), defs)
-    ()
-  }
+  def setColumnComment(st: GraftSessionState, name: String, column: String,
+      c: Option[String]): Unit =
+    update(st, name) { t =>
+      val k = column.toLowerCase
+      t.copy(columnComments = c.fold(t.columnComments - k)(v =>
+        t.columnComments + (k -> v)))
+    }
 
-  def defaultsOf(name: String): Map[String, String] =
-    Option(defaultsRegistry.get(key(name))).getOrElse(Map.empty)
+  def comment(st: GraftSessionState, name: String): Option[String] =
+    record(st, name).comment
 
-  def exists(name: String): Boolean =
-    try registry.containsKey(key(name))
-    catch { case scala.util.control.NonFatal(_) => false }
+  def columnComment(st: GraftSessionState, name: String,
+      column: String): Option[String] =
+    record(st, name).columnComments.get(column.toLowerCase)
+
+  def exists(st: GraftSessionState, name: String): Boolean =
+    record(st, name).content.isDefined
 
   /** Materialize `df` as the content of temp table `name` (create or
     * full replace) and (re-)register the fronting view.
@@ -89,7 +115,7 @@ object TempTables {
     * a LocalRelation is immutable, so a DataFrame captured before the
     * mutation keeps its rows exactly like a superseded scratch dir.
     */
-  def put(name: String, df: DataFrame): Unit = {
+  def put(st: GraftSessionState, name: String, df: DataFrame): Unit = {
     val spark = df.sparkSession
     val cap =
       try spark.conf.getOption("spark.graft.tempTableLocalRows")
@@ -110,10 +136,8 @@ object TempTables {
         // for never breaking a reader.
         Left(graft.operators.Scratch.materialize(df, s"ttab_$name")._2)
       }
-    register(name, content)
-    registry.put(key(name), content)
-    pending.remove(key(name))
-    ()
+    register(st, name, content)
+    update(st, name)(_.copy(content = Some(content), pending = 0))
   }
 
   /** Recursively nullable schema — what a parquet read-back reports, so
@@ -137,10 +161,11 @@ object TempTables {
   }
 
   /** (Re-)point the fronting view at the given content. */
-  private def register(name: String, content: Either[String, DataFrame]): Unit =
+  private def register(st: GraftSessionState, name: String,
+      content: Either[String, DataFrame]): Unit =
     content match {
       case Left(dir) =>
-        SparkSession.active.read.parquet(dir).createOrReplaceTempView(name)
+        st.session.read.parquet(dir).createOrReplaceTempView(name)
       case Right(local) => local.createOrReplaceTempView(name)
     }
 
@@ -159,118 +184,90 @@ object TempTables {
   // O(depth) analysis per read, so the cap rematerializes. Transactions
   // flush first — BEGIN/ROLLBACK reason over materialized dirs.
 
-  private val pending = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Int]()
-
   private val maxPendingDepth = 32
 
   /** Register `df` (current ∪ frozen-appendix) as the table's content
     * WITHOUT materializing, provided the pending chain stays shallow.
     * Callers guarantee every new leaf in `df` is immutable.
     */
-  def putLazy(name: String, df: DataFrame): Unit = {
-    val d = Option(pending.get(key(name))).map(_.intValue()).getOrElse(0)
-    if (d >= maxPendingDepth || txnActive) put(name, df)
+  def putLazy(st: GraftSessionState, name: String, df: DataFrame): Unit = {
+    val d = record(st, name).pending
+    if (d >= maxPendingDepth || txnActive(st)) put(st, name, df)
     else {
       df.createOrReplaceTempView(name)
-      pending.put(key(name), d + 1)
-      ()
+      update(st, name)(_.copy(pending = d + 1))
     }
   }
 
   /** Materialize every pending lazy chain of this session (transaction
     * boundaries and EXPORT need real dirs).
     */
-  def flushPending(): Unit = {
-    val spark = SparkSession.active
-    import scala.jdk.CollectionConverters._
-    pending.keySet.asScala.toSeq.collect { case (s, n) if s eq spark => n }
-      .foreach(n => put(n, spark.table(n)))
-  }
-
-  /** Current content (the fronting view). */
-  def table(name: String): DataFrame = SparkSession.active.table(name)
+  def flushPending(st: GraftSessionState): Unit =
+    st.tables.asScala.collect { case (n, t) if t.pending > 0 => n }.toSeq
+      .foreach(n => put(st, n, st.session.table(n)))
 
   /** Names of this session's temp tables (for EXPORT DATABASE). */
-  def names(): Seq[String] = {
-    val spark = SparkSession.active
-    import scala.jdk.CollectionConverters._
-    registry.keySet.asScala.toSeq.collect {
-      case (s, n) if s eq spark => n }.sorted
-  }
+  def names(st: GraftSessionState): Seq[String] =
+    st.tables.asScala.collect { case (n, t) if t.content.isDefined => n }
+      .toSeq.sorted
 
-  def drop(name: String): Boolean = {
-    val content = registry.remove(key(name))
-    pending.remove(key(name))
-    pkRegistry.remove(key(name))
-    defaultsRegistry.remove(key(name))
-    if (content == null) false
-    else {
-      SparkSession.active.catalog.dropTempView(name.toLowerCase)
-      Comments.dropTable(name)
-      // Inside a transaction the dropped snapshot is the ROLLBACK
-      // target — deletion defers to the scratch root's JVM-exit
-      // cleanup, the same lifecycle superseded mutation snapshots get.
-      // (Local snapshots have no dir; the driver copy is GC'd.)
-      content match {
-        case Left(dir) if !txnActive =>
-          graft.operators.Scratch.delete(SparkSession.active, dir)
-        case _ => ()
-      }
-      true
+  /** Drop the table with all its metadata (keys, defaults, comments). */
+  def drop(st: GraftSessionState, name: String): Boolean =
+    Option(st.tables.remove(name.toLowerCase)).flatMap(_.content) match {
+      case None => false
+      case Some(content) =>
+        st.session.catalog.dropTempView(name.toLowerCase)
+        // Inside a transaction the dropped snapshot is the ROLLBACK
+        // target — deletion defers to the scratch root's JVM-exit
+        // cleanup, the same lifecycle superseded mutation snapshots get.
+        // (Local snapshots have no dir; the driver copy is GC'd.)
+        content match {
+          case Left(dir) if !txnActive(st) =>
+            graft.operators.Scratch.delete(st.session, dir)
+          case _ => ()
+        }
+        true
     }
-  }
 
   // --- Transactions (BEGIN/COMMIT/ROLLBACK) over the temp-table layer ---
   //
   // The mutation protocol above IS multi-version: every write lands in a
   // fresh scratch dir and re-points the fronting view, never touching
   // the superseded snapshot. A transaction is therefore just a saved
-  // registry state: BEGIN captures each table's current (dir, pk) —
-  // O(tables) driver metadata, no data copied — COMMIT discards the
-  // capture, ROLLBACK re-registers every captured snapshot, drops
-  // tables created since, and restores tables dropped since. Scope:
+  // registry state: BEGIN copies the session's record map — O(tables)
+  // driver metadata, no data copied — COMMIT discards the copy,
+  // ROLLBACK drops tables created since and puts the copy back whole
+  // (content, keys, defaults, comments), re-registering every captured
+  // snapshot, so tables dropped since come back as they were. Scope:
   // the graft temp-table layer (catalog tables keep Spark's own
   // semantics — Spark has no transactions to coordinate with).
   // Error texts mirror DuckDB's TransactionContext errors (pinned on
   // 1.0: nested BEGIN, bare COMMIT/ROLLBACK).
 
-  private val txnRegistry = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, Map[String, (Either[String, DataFrame], Option[Seq[String]])]]()
+  def txnActive(st: GraftSessionState): Boolean = st.txn.get != null
 
-  def txnActive: Boolean = txnRegistry.containsKey(SparkSession.active)
-
-  def txnBegin(): Unit = {
-    val spark = SparkSession.active
-    flushPending() // BEGIN captures dirs; lazy chains must be real
-    val snap = names().map(n =>
-      n -> ((registry.get(key(n)), keysOf(n)))).toMap
-    if (txnRegistry.putIfAbsent(spark, snap) != null)
+  def txnBegin(st: GraftSessionState): Unit = {
+    flushPending(st) // BEGIN captures dirs; lazy chains must be real
+    if (!st.txn.compareAndSet(null, st.tables.asScala.toMap))
       throw new IllegalStateException(
         "TransactionContext Error: cannot start a transaction within a transaction")
   }
 
-  def txnCommit(): Unit = {
-    if (txnRegistry.remove(SparkSession.active) == null)
+  def txnCommit(st: GraftSessionState): Unit = {
+    if (st.txn.getAndSet(null) == null)
       throw new IllegalStateException(
         "TransactionContext Error: cannot commit - no transaction is active")
   }
 
-  def txnRollback(): Unit = {
-    val spark = SparkSession.active
-    val snap = txnRegistry.remove(spark)
+  def txnRollback(st: GraftSessionState): Unit = {
+    val snap = st.txn.getAndSet(null)
     if (snap == null)
       throw new IllegalStateException(
         "TransactionContext Error: cannot rollback - no transaction is active")
-    names().filterNot(snap.contains).foreach(drop)
-    snap.foreach { case (n, (content, pk)) =>
-      register(n, content)
-      registry.put(key(n), content)
-      pending.remove(key(n))
-      pk match {
-        case Some(cols) => pkRegistry.put(key(n), cols)
-        case None => pkRegistry.remove(key(n)); ()
-      }
-    }
+    names(st).filterNot(n => snap.get(n).exists(_.content.isDefined))
+      .foreach(drop(st, _))
+    st.tables.keySet.retainAll(snap.keySet.asJava)
+    st.tables.putAll(snap.asJava)
+    snap.foreach { case (n, t) => t.content.foreach(register(st, n, _)) }
   }
 }

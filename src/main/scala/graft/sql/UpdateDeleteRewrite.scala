@@ -46,14 +46,13 @@ object UpdateDeleteRewrite {
   private[sql] val v1FileProviders =
     Set("parquet", "csv", "json", "orc", "text", "avro", "hive")
 
-  private def isPlainV1Table(name: String): Boolean =
+  private def isPlainV1Table(st: GraftSessionState, name: String): Boolean =
     try {
       // Graft temp tables (materialized snapshots fronted by a temp
       // view — TempTables) are mutable targets too; plain user temp
       // views are not.
-      if (TempTables.exists(name)) return true
-      val spark = org.apache.spark.sql.SparkSession.active
-      val cat = spark.sessionState.catalog
+      if (TempTables.exists(st, name)) return true
+      val cat = st.session.sessionState.catalog
       val ident = org.apache.spark.sql.catalyst.TableIdentifier(name)
       cat.getTempView(name).isEmpty && cat.tableExists(ident) && {
         val meta = cat.getTableMetadata(ident)
@@ -75,7 +74,7 @@ object UpdateDeleteRewrite {
   }
 
   /** The TVF call text, or None → delegate to Spark's native path. */
-  def rewrite(sql: String): Option[String] =
+  def rewrite(st: GraftSessionState, sql: String): Option[String] =
     try {
       val words = SqlLexer.topLevelWords(sql)
       if (words.isEmpty) return None
@@ -86,7 +85,7 @@ object UpdateDeleteRewrite {
           if (words.length < 3 || words(2)._1 != "SET") return None
           val tbl = sql.substring(
             words.head._2 + "UPDATE".length, words(2)._2).trim
-          if (!tbl.matches("[A-Za-z_]\\w*") || !isPlainV1Table(tbl)) return None
+          if (!tbl.matches("[A-Za-z_]\\w*") || !isPlainV1Table(st, tbl)) return None
           val setStart = words(2)._2 + "SET".length
           val whereW = words.find(w => w._1 == "WHERE" && w._2 > setStart)
           // RETURNING exprs (round 20): trailing clause, host returns
@@ -157,7 +156,7 @@ object UpdateDeleteRewrite {
           val tbl = stripSemi(sql.substring(fromEnd,
             usingW.orElse(whereW).orElse(retW).map(_._2)
               .getOrElse(sql.length))).trim
-          if (!tbl.matches("[A-Za-z_]\\w*") || !isPlainV1Table(tbl)) return None
+          if (!tbl.matches("[A-Za-z_]\\w*") || !isPlainV1Table(st, tbl)) return None
           val whereText = whereW
             .map(w => stripSemi(sql.substring(w._2 + "WHERE".length,
               retW.map(_._2).getOrElse(sql.length))))

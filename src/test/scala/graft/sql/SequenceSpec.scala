@@ -34,6 +34,18 @@ class SequenceSpec extends AnyFunSuite {
       s"5 evaluations must advance 5 times: ${vals.toSeq}")
   }
 
+  test("nextval resolves in the analyzing session, not the task thread's") {
+    spark.sql("CREATE OR REPLACE SEQUENCE seq_s1 START 1").collect()
+    assert(spark.sql("SELECT nextval('seq_s1')").head().getLong(0) == 1L)
+    val child = spark.newSession()
+    child.sql("CREATE SEQUENCE seq_s1 START 100").collect()
+    assert(child.sql("SELECT nextval('seq_s1')").head().getLong(0) == 100L)
+    val vals = child.sql("SELECT nextval('seq_s1') v FROM range(3)")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(vals == Seq(101L, 102L, 103L), s"child got $vals")
+    assert(spark.sql("SELECT nextval('seq_s1')").head().getLong(0) == 2L)
+  }
+
   test("error surfaces match DuckDB's") {
     val missing = intercept[Exception](
       spark.sql("SELECT nextval('no_such_seq')").collect())

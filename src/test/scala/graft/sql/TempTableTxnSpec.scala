@@ -13,15 +13,9 @@ import graft.SparkTestSession
   */
 class TempTableTxnSpec extends AnyFunSuite {
 
-  // This spec calls TempTables' API directly (keysOf/exists), which
-  // resolves SparkSession.active on the TEST thread — pin it, since a
-  // prior suite may have run on a different thread (spark.sql calls
-  // set-and-restore active, so they never need this).
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    org.apache.spark.sql.SparkSession.setActiveSession(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
+  // TempTables' API (keysOf/exists) reads the session's own state holder.
+  private lazy val st = GraftSessionState.of(spark)
 
   private def sql(s: String) = spark.sql(s).collect()
 
@@ -51,7 +45,7 @@ class TempTableTxnSpec extends AnyFunSuite {
     sql("CREATE TEMP TABLE txn_b (k INTEGER, v VARCHAR)")
     sql("INSERT INTO txn_b VALUES (1, 'x')")
     sql("ROLLBACK")
-    assert(!TempTables.exists("txn_b"))
+    assert(!TempTables.exists(st, "txn_b"))
     assert(!spark.catalog.tableExists("txn_b"))
   }
 
@@ -61,11 +55,28 @@ class TempTableTxnSpec extends AnyFunSuite {
     sql("INSERT INTO txn_c VALUES (1, 'survives')")
     sql("BEGIN")
     sql("DROP TABLE txn_c")
-    assert(!TempTables.exists("txn_c"))
+    assert(!TempTables.exists(st, "txn_c"))
     sql("ROLLBACK")
     assert(rows("txn_c") == Seq(1 -> "survives"))
-    assert(TempTables.keysOf("txn_c").contains(Seq("k")))
+    assert(TempTables.keysOf(st, "txn_c").contains(Seq("k")))
     sql("DROP TABLE txn_c")
+    // DEFAULTs and the table COMMENT come back with the content: DuckDB
+    // 1.0 returns rows (1,7),(2,7) and comment 'tbl' for this script.
+    sql("DROP TABLE IF EXISTS txn_e")
+    sql("CREATE TEMP TABLE txn_e (a INT PRIMARY KEY, b INT DEFAULT 7)")
+    sql("COMMENT ON TABLE txn_e IS 'tbl'")
+    sql("INSERT INTO txn_e (a) VALUES (1)")
+    sql("BEGIN")
+    sql("DROP TABLE txn_e")
+    sql("ROLLBACK")
+    sql("INSERT INTO txn_e (a) VALUES (2)")
+    val got = spark.sql("SELECT a, b FROM txn_e ORDER BY a").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(got == Seq(1 -> 7, 2 -> 7), s"got $got")
+    val comment = spark.sql(
+      "SELECT comment FROM duckdb_tables() WHERE table_name = 'txn_e'").collect()
+    assert(comment.map(_.getString(0)).toSeq == Seq("tbl"))
+    sql("DROP TABLE txn_e")
   }
 
   test("ABORT is a ROLLBACK synonym") {
